@@ -516,7 +516,7 @@ def main() -> None:
     extras["filegroups_10x_queries"] = q10.distinct().count()
     rss0 = _rss_mb()
     t0 = time.time()
-    n_fg = _qmod._query_broadcast_queries_filegroups(
+    n_fg = _qmod._query_filegroups(
         pt_big, q10.distinct(), 2, colocated=True, chunk_size=25_000
     ).count()
     extras["filegroups_10x_sec"] = round(time.time() - t0, 3)

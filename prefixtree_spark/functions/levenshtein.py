@@ -131,7 +131,7 @@ def extend_rows(
 
 
 # ---------------------------------------------------------------------------
-# banded (Ukkonen) variant — the max-distance-k traversal kernel
+# banded (Ukkonen) state kernel — the max-distance-k traversal hot loop
 # ---------------------------------------------------------------------------
 #
 # With a distance cap k, every DP cell with |j - p| > k (p = path chars
@@ -141,128 +141,29 @@ def extend_rows(
 # (end-cap hit), and the cell values that are ≤ k — so carrying the
 # full max_len+1 row computes ~max_len/(2k+1) × more arithmetic than
 # the answers need (at k=2 over ~38-char names: 39 cells vs 5). The
-# banded row stores exactly the window j ∈ [p-k, p+k]; it shifts right
-# one cell per path char, so window index w maps to j = p - k + w.
+# banded state stores exactly the window j ∈ [p-k, p+k]; it shifts
+# right one cell per path char, so window index w maps to j = p - k + w.
 # Out-of-window influence is impossible: the full recurrence reads
 # (j-1, prev), (j, prev), (j-1, cur) — all within the shifted window —
 # and any outside cell is > k, which the min() flow can never carry
 # into a ≤ k answer. Values INSIDE the band can exceed k transiently
-# (they're exact, not clamped); correctness equals the full kernel's,
-# pinned by the banded-vs-full property test.
-
-
-def banded_initial_rows(batch: QueryBatch, k: int, n: int) -> np.ndarray:
-    """Window at p=0: j ∈ [-k, k]; cell j holds distance(ε, q[:j]) = j;
-    j < 0 cells are padding (BIG)."""
-    js = np.arange(-k, k + 1, dtype=np.int32)
-    row = np.where(js >= 0, js, BIG).astype(np.int32)
-    return np.broadcast_to(row, (n, 2 * k + 1)).copy()
-
-
-def banded_row_mins(
-    batch: QueryBatch, rows: np.ndarray, idx: np.ndarray, p: int, k: int
-) -> np.ndarray:
-    """Branch-and-bound lower bound over the valid window cells
-    (0 ≤ j ≤ len(q)). Cells outside the window are > k by the band
-    argument, so this min equals the full row's min whenever either
-    is ≤ k — the only regime the pruning decision reads."""
-    js = (p - k) + np.arange(2 * k + 1, dtype=np.int32)
-    valid = (js[None, :] >= 0) & (js[None, :] <= batch.lens[idx][:, None])
-    return np.where(valid, rows, BIG).min(axis=1)
-
-
-def banded_final_distances(
-    batch: QueryBatch, rows: np.ndarray, idx: np.ndarray, p: int, k: int
-) -> np.ndarray:
-    """Exact distance = cell j = len(q). Callers guarantee
-    |len(q) - p| ≤ k (the end-cap length band), so the cell is in
-    window."""
-    w = batch.lens[idx] - (p - k)
-    return rows[np.arange(len(idx)), w]
-
-
-def extend_rows_banded(
-    batch: QueryBatch,
-    rows: np.ndarray,
-    idx: np.ndarray,
-    label: str,
-    p: int,
-    k: int,
-) -> np.ndarray:
-    """Banded twin of ``extend_rows``: advance the (len(idx), 2k+1)
-    window rows by ``label``'s characters, where ``p`` is the path
-    length BEFORE this edge. Cost O(len(label) · len(idx) · (2k+1)) —
-    independent of the batch's max query length."""
-    W = 2 * k + 1
-    L = len(label)
-    # query codepoints the whole edge needs: columns j-1 for
-    # j ∈ [p+1-k, p+L+k] → [p-k, p+L+k-1]; ONE fancy-index gather per
-    # edge, with out-of-range columns pre-poisoned to -1 (no codepoint
-    # is negative, so they can never match — replaces a per-char mask)
-    cols = np.arange(p - k, p + L + k, dtype=np.int64)
-    col_ok = (cols >= 0) & (cols < batch.max_len)
-    if batch.max_len:
-        sub_codes = batch.codes[
-            idx[:, None], np.clip(cols, 0, batch.max_len - 1)[None, :]
-        ]
-        if not col_ok.all():
-            sub_codes = sub_codes.copy() if sub_codes.base is not None else sub_codes
-            sub_codes[:, ~col_ok] = -1
-    else:
-        sub_codes = np.full((len(idx), len(cols)), -1, dtype=np.int32)
-    js_w = np.arange(W, dtype=np.int32)
-    buf_a, buf_b = np.empty_like(rows), np.empty_like(rows)
-    up = np.empty_like(rows)  # scratch, reused across chars
-    diag = np.empty_like(rows)
-    cur = rows
-    for t, ch in enumerate(label):
-        c = ord(ch)
-        out = buf_a if cur is not buf_a else buf_b
-        # cell w at the new window is j = (p+t+1-k) + w; its query
-        # char column j-1 sits at offset t + w into the gathered slice
-        neq = sub_codes[:, t : t + W] != c
-        # diag (j-1, prev) = cur[w]; up (j, prev) = cur[w+1] (BIG pad)
-        up[:, :-1] = cur[:, 1:]
-        up[:, -1] = BIG
-        up += 1
-        np.add(cur, neq, out=diag)
-        np.minimum(diag, up, out=out)
-        # j == 0 has no diag/left: distance(path, ε) = p+t+1; cells
-        # j < 0 are padding
-        w0 = k - (p + t + 1)
-        if w0 >= 0:
-            if w0 < W:
-                out[:, w0] = p + t + 1
-            out[:, : min(w0, W)] = BIG
-        # insertion chain out[j] = min(out[j-1]+1, out[j]): running
-        # min in (value - w) space (window js are unit-spaced)
-        out -= js_w
-        np.minimum.accumulate(out, axis=1, out=out)
-        out += js_w
-        cur = out
-    return cur if cur is not rows else rows.copy()
-
-
-# ---------------------------------------------------------------------------
-# transposed banded state kernel — the r13 traversal hot loop
-# ---------------------------------------------------------------------------
+# (they're exact, not clamped); every in-window cell ≤ k equals the
+# full kernel's, pinned cell by cell against ``extend_rows`` by
+# test_banded_state_kernel_equals_row_kernel.
 #
-# Same Ukkonen band as above, but the window state is stored TRANSPOSED:
-# shape (W, n) with W = 2k+1, so each window cell w is one contiguous
-# (n,) row. The r13 profile of the both-big traversal put 80% of task
-# time inside ``extend_rows_banded`` — at W=5 the (n, W) layout spends
-# most of that in numpy fixed costs (``ufunc.accumulate`` machinery for
-# the 5-cell insertion chain, per-edge fancy gathers, strided column
-# ops). Transposed, every per-char op is a handful of contiguous-row
-# ufunc calls and the insertion chain is W-1 explicit ``minimum`` calls.
-# Semantics are IDENTICAL to the (n, W) kernel (property-pinned by
-# test_banded_state_kernel_equals_row_kernel and the banded-vs-full
-# traversal test).
+# The state is stored TRANSPOSED: shape (W, n) with W = 2k+1, so each
+# window cell w is one contiguous (n,) row. The r13 profile of the
+# both-big traversal put 80% of task time inside the earlier (n, W)
+# row layout, mostly numpy fixed costs (``ufunc.accumulate`` machinery
+# for the 5-cell insertion chain, per-edge fancy gathers, strided
+# column ops). Transposed, every per-char op is a handful of
+# contiguous-row ufunc calls and the insertion chain is W-1 explicit
+# ``minimum`` calls.
 
 
 def banded_initial_state(k: int, n: int) -> np.ndarray:
-    """Transposed twin of ``banded_initial_rows``: (W, n) window at
-    p=0; row w holds j = w - k → distance(ε, q[:j]) = j, BIG for j<0."""
+    """(W, n) window at p=0: row w holds j = w - k → distance(ε, q[:j])
+    = j, BIG for j<0."""
     js = np.arange(-k, k + 1, dtype=np.int32)
     col = np.where(js >= 0, js, BIG).astype(np.int32)
     return np.repeat(col[:, None], max(n, 0), axis=1)

@@ -15,45 +15,49 @@ Pruning is exactly the reference's (SURVEY.md §4 O5/O6):
     fold current_distance into the band (the reference documents the
     dog/drop double-count counterexample, PrefixTree.ecl:435-439).
 
-Three physical strategies — chosen by data shape, because at 100 TB
-either side may be the big one:
+Physical strategies — chosen by data shape, because at 100 TB either
+side may be the big one:
 
-  - ``mode="broadcast_queries"``: the node table stays distributed,
-    grouped by its build partition (each partition is an independent
-    forest, SURVEY.md §0); the query batch is broadcast to every
-    partition and ALL queries traverse the forest together in one
-    vectorized DP (functions/levenshtein.py). Shuffle-free on the big
-    side; this is the inverted-index-style scale path for huge
-    dictionaries.
+  - distributed tree (``mode="broadcast_queries"``): the node table
+    stays distributed, each partition one or more whole forests
+    (SURVEY.md §0), and ``_traverse_forests`` walks every partition
+    once with ALL queries advancing together in one vectorized DP
+    (functions/levenshtein.py). Shuffle-free on the big side; the
+    inverted-index-style scale path for huge dictionaries. It is the
+    ONE per-partition traversal every distributed route below shares.
   - ``mode="broadcast_tree"``: the node table is collected+broadcast and
     queries stream through ``mapInPandas`` — the scale path for huge
     query sets over dictionaries that fit in executor memory.
   - ``mode="bfs"``: the reference's own physical plan — a driver loop of
     per-level frontier joins on ``node_id == parent_id`` with the band
     predicates as join filters and the DP as an Arrow-batched pandas UDF
-    (≡ LOOP + half-keyed JOIN, PrefixTree.ecl:430-442). Kept because it
-    is the only strategy when BOTH sides exceed memory; uses
-    ``localCheckpoint`` to stop iterative plan growth.
+    (≡ LOOP + half-keyed JOIN, PrefixTree.ecl:430-442). Explicit opt-in
+    only; uses ``localCheckpoint`` to stop iterative plan growth.
+
+When BOTH sides are big, one chunk loop (``_chunk_loop``) runs the
+distributed-tree traversal once per bounded query chunk over a tree
+colocated once, pins each chunk's result and unions them. Two feeds:
+the funnel (``_query_funnel``) streams query strings through the
+driver with ``toLocalIterator`` and broadcasts each chunk, serially;
+file groups (``mode="filegroups"``, ``write_query_groups`` /
+``query_groups``) have executors write the query side to parquet
+groups that traversal tasks read from shared storage, two group jobs
+in flight, so the driver never deserializes query text.
 
 ``mode="auto"`` routes by BOTH sides' sizes: small tree →
-broadcast_tree; big tree + small query set → broadcast_queries; big
-tree + big query set → chunked colocated traversal (query side
-streamed in bounded chunks; the tree never moves), re-sharding the
-tree first if its per-partition forests exceed a traversal task's
-budget. bfs is explicit-opt-in only (``mode="bfs"``) — it was measured
-to lose to brute force at k>=2 (SCALING.md round-4/5).
-
-``mode="filegroups"`` is the chunked strategy with the driver taken
-off the data path: the query side is hashed into parquet file groups
-executor-side and each chunk's traversal tasks read their group from
-shared storage — for query sides so large that even streaming them
-through the driver (toLocalIterator + per-chunk broadcast) would make
-the driver NIC the throughput ceiling.
+broadcast_tree; big tree + small query set → one-shot distributed
+tree; big tree + big query set → the chunk loop (the funnel, or file
+groups past ``_AUTO_FILEGROUP_QUERIES``), re-sharding the tree first
+if its per-partition forests exceed a traversal task's budget. bfs is
+never auto-chosen — it was measured to lose to brute force at k>=2
+(SCALING.md round-4/5).
 """
 
 from __future__ import annotations
 
 from collections import OrderedDict
+from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
 
 import numpy as np
 import pandas as pd
@@ -123,8 +127,7 @@ _DRIVER_MERGE_NODES = 100_000
 # Distinct query strings up to this count may be collected + broadcast
 # (tens of MB of driver memory); beyond it, with the tree ALSO too big
 # to collect, mode="auto" streams the query side in chunks of this size
-# through the distributed-tree traversal (see
-# _query_broadcast_queries_chunked).
+# through the distributed-tree traversal (see _query_funnel).
 _AUTO_BROADCAST_QUERIES = 1_000_000
 
 # Beyond this many distinct query strings, even STREAMING the query
@@ -138,13 +141,6 @@ _AUTO_BROADCAST_QUERIES = 1_000_000
 # unset, the scratch defaults to a driver-local tempdir (correct on
 # local[...] where all executors share the host).
 _AUTO_FILEGROUP_QUERIES = 20_000_000
-
-# Chunk jobs the funnel loop keeps in flight (driver threads). 1 =
-# strictly serial (the r13-measured default when fetch ran one job per
-# small partition); >1 overlaps the next chunk's toLocalIterator fetch
-# with the current chunk's traversal job (guide §2.6). The driver
-# memory bound becomes this many chunks of query strings in flight.
-_CHUNK_PIPELINE_DEPTH = 1
 
 # With both sides big, auto mode chunks the query side as long as the
 # tree's per-partition forests still fit one traversal task (the
@@ -418,7 +414,9 @@ def _union_all(frames: list[DataFrame]) -> DataFrame:
     and re-checkpointed eagerly, so the frame handed back never carries
     more than fanout leaves no matter how many chunks ran (the r13
     400-frame probe measured the first action's plan pass growing with
-    leaf count even on the balanced tree)."""
+    leaf count even on the balanced tree). Each collapse releases the
+    leaf checkpoints it consumed, never the leaves of the returned
+    plan, so the caller's frames must be checkpoints it owns."""
 
     def tree(fs: list[DataFrame]) -> DataFrame:
         while len(fs) > 1:
@@ -430,12 +428,15 @@ def _union_all(frames: list[DataFrame]) -> DataFrame:
 
     fs = frames
     while len(fs) > _UNION_COLLAPSE_FANOUT:
-        fs = [
-            tree(fs[i : i + _UNION_COLLAPSE_FANOUT]).localCheckpoint(
-                eager=True
-            )
-            for i in range(0, len(fs), _UNION_COLLAPSE_FANOUT)
-        ]
+        collapsed = []
+        for i in range(0, len(fs), _UNION_COLLAPSE_FANOUT):
+            block = fs[i : i + _UNION_COLLAPSE_FANOUT]
+            collapsed.append(tree(block).localCheckpoint(eager=True))
+            # the collapsed copy is materialized: free the consumed
+            # leaves, else executors hold ~2x the result for the session
+            for f in block:
+                release_checkpoint(f)
+        fs = collapsed
     return tree(fs)
 
 
@@ -464,6 +465,31 @@ def _colocate_forests(pt: DataFrame) -> DataFrame:
     return pt.repartitionByRange(n_part, "compute_node")
 
 
+@contextmanager
+def _colocated_tree(pt: DataFrame, colocated: bool, release):
+    """Yield ``pt`` with every partition holding whole forests, for all
+    chunks of one loop. ``colocated=True`` promises that already holds
+    (a tree fresh from ``create``/``load_index``) and yields ``pt``
+    untouched. Otherwise ``_colocate_forests`` runs ONCE, pinned and
+    counted before the first chunk, and that pin — the only one this
+    helper ever unpersists — is released on exit. ``release`` runs
+    right after the count: auto passes its own pin on ``pt`` there, so
+    two full cached trees overlap for one repartition pass, never for
+    the whole loop (a caller's own cache is never passed, so it stays);
+    the chunk loop passes None."""
+    if colocated:
+        yield pt
+        return
+    pinned = _colocate_forests(pt).persist()
+    try:
+        pinned.count()
+        if release is not None:
+            release()
+        yield pinned
+    finally:
+        pinned.unpersist()
+
+
 class _QueryPayload:
     """Broadcast holder for a traversal's query batch: ships ONLY the
     strings, builds the ``QueryBatch`` lazily ON THE WORKER and memoizes
@@ -474,7 +500,7 @@ class _QueryPayload:
     wire still carries the compact string list (the prebuilt-QueryBatch
     broadcast alternative ships the padded int32 codes matrix, ~9x the
     bytes at name-length payloads — wrong trade at the 1M-query chunk
-    cap even though it measured the same locally; probe_payload_r13).
+    cap even though it measured the same locally; SCALING r13).
     Workers run tasks serially, so the memo needs no lock."""
 
     __slots__ = ("queries", "_batch")
@@ -496,124 +522,125 @@ class _QueryPayload:
         return self._batch
 
 
-def _query_broadcast_queries(
-    pt: DataFrame, query_strings: list[str], k: int, *, colocated: bool = False
-) -> DataFrame:
-    """Tree stays distributed (one independent forest per build
-    partition); queries broadcast; one traversal task per forest.
-
-    ``colocated=True`` promises every node row sits in the same Spark
-    partition as its whole forest (true for a DataFrame fresh out of
-    ``create`` and for ``load_index`` output) — then the traversal runs
-    in-place via mapInPandas with ZERO shuffle of the dictionary side.
-    Otherwise a groupBy(compute_node) shuffle restores colocation
-    first. At scale the zero-shuffle path is the point of this mode:
-    only the (small) query batch moves."""
-    df, _bq = _query_broadcast_queries_bc(
-        pt, query_strings, k, colocated=colocated
-    )
-    return df
-
-
-def _query_broadcast_queries_bc(
-    pt: DataFrame, query_strings: list[str], k: int, *, colocated: bool = False
-):
-    """`_query_broadcast_queries` returning ``(df, broadcast)`` so loop
-    callers can ``destroy()`` each chunk's broadcast right after its
-    eager checkpoint (r13 advice): each reused Python worker otherwise
-    retains every chunk's unpickled payload (and its memoized
-    QueryBatch, ~9x the string bytes) in its broadcast registry until
-    the JVM ContextCleaner happens to GC the handle — nondeterministic
-    worker RSS growth at the thousands-of-chunks scale the chunk loops
-    target."""
-    spark = pt.sparkSession
-    bq = spark.sparkContext.broadcast(_QueryPayload(query_strings))
+def _traverse_forests(pt: DataFrame, source, k: int) -> DataFrame:
+    """THE distributed-tree traversal: every partition of ``pt`` (one or
+    more whole forests) is walked once by the whole query batch, in
+    place, with zero shuffle of the dictionary side. ``source`` names
+    the batch: a broadcast ``_QueryPayload`` or a file-group path that
+    each task reads from shared storage (``_filegroup_batch``), so only
+    the path rides the task closure. A partition holding several
+    forests traverses correctly: node ids are globally unique and every
+    forest root hangs off the virtual root, so the CSR index is the
+    forests' union."""
 
     def run_partition(batches):
         frames = [pdf for pdf in batches if len(pdf)]
         if not frames:
             return
+        batch = (
+            _filegroup_batch(source)
+            if isinstance(source, str)
+            else source.value.batch()
+        )
+        if not len(batch):
+            return
         pdf = pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
-        yield _traverse_pdf(pdf, bq.value.batch(), k)
+        yield _traverse_pdf(pdf, batch, k)
 
-    if colocated:
-        return pt.mapInPandas(run_partition, schema=RESULT_SCHEMA), bq
-    # restore colocation with an EXPLICIT-count repartition + the same
-    # per-partition traversal — NOT groupBy().applyInPandas: AQE
-    # coalesces the group exchange's small byte size to ~1 partition
-    # and applyInPandas then runs one QueryBatch build + DP PER GROUP
-    # sequentially inside it (measured: 14.5 s vs 1.4 s colocated at
-    # 14k queries × 32 forests — QueryBatch init is ~0.5 s at that
-    # batch size). A partition holding several complete forests
-    # traverses correctly: node ids are globally unique and every
-    # forest root hangs off the virtual root, so the CSR index is the
-    # forests' union (same argument as _merged_local_index's
-    # merge=False route).
-    n_part = max(
-        pt.rdd.getNumPartitions(), spark.sparkContext.defaultParallelism
-    )
-    return (
-        pt.repartition(n_part, "compute_node").mapInPandas(
-            run_partition, schema=RESULT_SCHEMA
-        ),
-        bq,
-    )
+    return pt.mapInPandas(run_partition, schema=RESULT_SCHEMA)
 
 
-def _query_broadcast_queries_chunked(
-    pt: DataFrame,
-    qdf: DataFrame,
-    k: int,
-    *,
-    colocated: bool = False,
-    chunk_size: int | None = None,
+def _query_broadcast_queries(
+    pt: DataFrame, query_strings: list[str], k: int, *, colocated: bool = False
 ) -> DataFrame:
-    """Both-sides-big strategy: iterate ``_query_broadcast_queries``
-    over bounded slices of the query side, pinning each slice's result.
+    """One-shot distributed-tree route: the whole (collected) query
+    batch rides ONE broadcast to every forest.
+
+    ``colocated=True`` promises every node row sits in the same Spark
+    partition as its whole forest (true for a DataFrame fresh out of
+    ``create`` and for ``load_index`` output) — then the traversal runs
+    in place with ZERO shuffle of the dictionary side. Otherwise an
+    EXPLICIT-count hash repartition on compute_node restores colocation
+    first — NOT groupBy().applyInPandas: AQE coalesces the group
+    exchange's small byte size to ~1 partition and applyInPandas then
+    runs one QueryBatch build + DP PER GROUP sequentially inside it
+    (measured: 14.5 s vs 1.4 s colocated at 14k queries × 32 forests)."""
+    spark = pt.sparkSession
+    bq = spark.sparkContext.broadcast(_QueryPayload(query_strings))
+    if not colocated:
+        n_part = max(
+            pt.rdd.getNumPartitions(), spark.sparkContext.defaultParallelism
+        )
+        pt = pt.repartition(n_part, "compute_node")
+    return _traverse_forests(pt, bq, k)
+
+
+def _chunk_loop(
+    pt: DataFrame, chunks, k: int, *, colocated: bool, in_flight: int
+) -> DataFrame:
+    """The both-sides-big loop: one ``_traverse_forests`` job per query
+    chunk over a tree colocated once (``_colocated_tree``), each result
+    pinned eagerly, all unioned by ``_union_all``. A chunk is a list of
+    query strings — broadcast for its one job and destroyed right after
+    the pin (r13 advice: every reused Python worker otherwise retains
+    every chunk's payload + memoized QueryBatch until ContextCleaner GC
+    happens to run) — or a file-group path.
+
+    ``in_flight`` chunk jobs run at once (driver threads submitting
+    independent Spark jobs). The funnel feeds this loop serially:
+    overlapping its traversal jobs with the toLocalIterator fetch was
+    measured SLOWER (r13: 57.0/53.6 s serial vs 58.5/62.2 s piped —
+    the overlapped jobs starve the iterator's own fetch jobs). File
+    groups are pure Spark jobs with no driver iterator to starve, so
+    they overlap the next group's job into each chunk's driver-side
+    turnaround (~3 s/chunk fixed cost, SCALING r12). Results are
+    unioned in chunk order either way; each job pins its own result,
+    so concurrency changes wall-clock, never rows."""
+    spark = pt.sparkSession
+    with _colocated_tree(pt, colocated, None) as tree:
+
+        def run(chunk) -> DataFrame:
+            source = (
+                chunk
+                if isinstance(chunk, str)
+                else spark.sparkContext.broadcast(_QueryPayload(chunk))
+            )
+            df = _traverse_forests(tree, source, k).localCheckpoint(eager=True)
+            if source is not chunk:
+                source.destroy()
+            return df
+
+        if in_flight > 1:
+            with ThreadPoolExecutor(max_workers=in_flight) as pool:
+                pinned = list(pool.map(run, chunks))
+        else:
+            pinned = [run(chunk) for chunk in chunks]
+    if not pinned:
+        return spark.createDataFrame([], RESULT_SCHEMA)
+    return _union_all(pinned)
+
+
+def _query_funnel(
+    pt: DataFrame, qdf: DataFrame, k: int, *, colocated: bool = False
+) -> DataFrame:
+    """Both-sides-big strategy through the driver: stream the query side
+    with ``toLocalIterator`` in chunks of ``_AUTO_BROADCAST_QUERIES``
+    strings through the serial chunk loop.
 
     The round-4 regime map (SCALING.md) showed bfs LOSING to brute
-    force at k>=2 when both sides are big (weaker pruning explodes the
-    frontier; per-level checkpoints pay for it), while
-    broadcast_queries won by 17x whenever the query side fit — so auto
-    mode now CHUNKS the query side through that winning strategy
-    instead of falling through to bfs. Driver memory stays bounded by
-    one chunk (``toLocalIterator`` streams the query strings); the
-    tree never moves (colocated traversal) and is traversed once per
-    chunk — per-chunk cost is flat, total cost is linear in the number
-    of chunks, and nothing in the plan depends on both sides at once.
-    """
-    spark = pt.sparkSession
-    if chunk_size is None:
-        chunk_size = _AUTO_BROADCAST_QUERIES
-    chunk_size = max(1, chunk_size)
-    owned = None
-    if not colocated:
-        # colocate ONCE for all chunks (the per-call strategy would
-        # re-shuffle the tree per chunk through its groupBy); range
-        # spread at 2x parallelism — see _colocate_forests for the
-        # measured hash-collision/AQE rationale
-        owned = pt = _colocate_forests(pt).persist()
-        pt.count()
-    # Deliberately SERIAL (r13): pipelining the traversal onto a worker
-    # thread while the main thread pulls the next chunk off
-    # toLocalIterator was measured SLOWER at 13 chunks (57.0/53.6 s
-    # serial vs 58.5/62.2 s piped) — the overlapped traversal jobs
-    # contend with the iterator's own per-partition fetch jobs and
-    # stall chunk formation. query_groups (whose chunks are pure Spark
-    # jobs with no driver iterator to starve) is where the overlap
-    # pays, and has it.
-    #
-    # Fetch granularity (r13): toLocalIterator runs ONE job per
-    # partition of its input, so iterating the query side at its
-    # shuffle-partition count pays a driver round trip per (small)
-    # partition — ~90 ms each, ~3 s of the measured 28 s both-big wall
-    # at 32 partitions. Coalescing the (persisted) query side to
-    # ~chunk-sized partitions makes fetch jobs as big as the chunks the
-    # loop builds anyway: same driver-memory bound (one partition ≈ one
-    # chunk in flight), 10x fewer round trips. coalesce() is narrow —
-    # reading from the cache, no shuffle; chunk membership may shift,
-    # which is invisible in the unioned result (each distinct string
-    # traverses exactly once either way).
+    force at k>=2 when both sides are big, while the broadcast-queries
+    traversal won by 17x whenever the query side fit — so auto mode
+    CHUNKS the query side through that traversal. Driver memory stays
+    bounded by one chunk; the tree never moves and is traversed once
+    per chunk, so total cost is linear in the number of chunks.
+
+    Fetch granularity (r13): toLocalIterator runs ONE job per partition
+    of its input (~90 ms each, ~3 s of a 28 s both-big wall at 32
+    partitions). Coalescing the (persisted) query side to ~chunk-sized
+    partitions makes fetch jobs as big as the chunks: same memory
+    bound, 10x fewer round trips. coalesce() is narrow — it reads from
+    the cache, no shuffle."""
+    chunk_size = max(1, _AUTO_BROADCAST_QUERIES)
     lvl = qdf.storageLevel
     n_q_parts = qdf.rdd.getNumPartitions()
     if (lvl.useMemory or lvl.useDisk) and n_q_parts > 1:
@@ -622,135 +649,54 @@ def _query_broadcast_queries_chunked(
         target = max(1, min(n_q_parts, -(-qdf.count() // chunk_size)))
         if target < n_q_parts:
             qdf = qdf.coalesce(target)
-    chunks: list[DataFrame] = []
 
-    def run_chunk(buf: list[str]) -> DataFrame:
-        df, bq = _query_broadcast_queries_bc(pt, buf, k, colocated=True)
-        df = df.localCheckpoint(eager=True)
-        # the checkpoint materialized every partition: the chunk's
-        # broadcast is dead weight from here. Destroy it NOW (r13
-        # advice) — otherwise every reused Python worker retains every
-        # chunk's unpickled payload + memoized QueryBatch in its
-        # broadcast registry until ContextCleaner GC happens to run,
-        # i.e. nondeterministic worker RSS growth over thousands of
-        # chunks.
-        bq.destroy()
-        return df
-
-    depth = max(1, int(_CHUNK_PIPELINE_DEPTH))
-    try:
-        if depth == 1:
-            buf: list[str] = []
-            for row in qdf.toLocalIterator():
-                buf.append(row[0])
-                if len(buf) >= chunk_size:
-                    chunks.append(run_chunk(buf))
-                    buf = []
-            if buf:
-                chunks.append(run_chunk(buf))
-        else:
-            # overlap the NEXT chunk's fetch with the current chunk's
-            # traversal job (guide §2.6): the traversal jobs leave the
-            # cluster idle during each chunk's driver turnaround
-            # (string fetch + broadcast + checkpoint bookkeeping), and
-            # with the fetch coalesced to chunk-sized partitions the
-            # r13 contention (per-partition fetch jobs starving chunk
-            # formation) is gone. Bounded: at most ``depth`` chunk
-            # jobs in flight, so the driver-memory bound stays
-            # ``depth`` chunks of strings.
-            from collections import deque
-            from concurrent.futures import ThreadPoolExecutor
-
-            pending: "deque" = deque()
-            with ThreadPoolExecutor(max_workers=depth) as pool:
+    def chunks():
+        buf: list[str] = []
+        for row in qdf.toLocalIterator():
+            buf.append(row[0])
+            if len(buf) >= chunk_size:
+                yield buf
                 buf = []
-                for row in qdf.toLocalIterator():
-                    buf.append(row[0])
-                    if len(buf) >= chunk_size:
-                        pending.append(pool.submit(run_chunk, buf))
-                        buf = []
-                        while len(pending) >= depth:
-                            chunks.append(pending.popleft().result())
-                if buf:
-                    pending.append(pool.submit(run_chunk, buf))
-                while pending:
-                    chunks.append(pending.popleft().result())
-    finally:
-        if owned is not None:
-            owned.unpersist()
-    if not chunks:
-        return spark.createDataFrame([], RESULT_SCHEMA)
-    return _union_all(chunks)
+        if buf:
+            yield buf
+
+    return _chunk_loop(pt, chunks(), k, colocated=colocated, in_flight=1)
 
 
-def _query_broadcast_queries_filegroups(
+def _query_filegroups(
     pt: DataFrame,
     qdf: DataFrame,
     k: int,
     *,
     colocated: bool = False,
     chunk_size: int | None = None,
-    scratch_dir: str | None = None,
 ) -> DataFrame:
     """Both-sides-big strategy without the driver funnel (r12 verdict
-    #5): the query side is written to parquet FILE GROUPS by the
-    executors, and each chunk's traversal tasks read their group's
-    file directly — the driver orchestrates only paths and never
-    deserializes a single query string.
-
-    ``_query_broadcast_queries_chunked`` streams the query side
-    through ``toLocalIterator`` and re-broadcasts each chunk, which is
-    correct and memory-bounded but puts the driver NIC on the data
-    path twice per chunk (collect up, broadcast down). At a truly
-    query-side-huge scale (billions of strings) that funnel is the
-    throughput ceiling. Here the movement is executors → shared
-    storage → executors: one distributed write hashed on the query
-    column (each DISTINCT string lands in exactly one group, so chunk
-    results cannot duplicate), then per chunk every traversal task
-    reads the group file from storage at aggregate-cluster read
-    bandwidth. Per-chunk structure is otherwise identical to the
-    broadcast path (same colocated zero-shuffle traversal, same eager
-    pin per chunk), so correctness is the same union-of-chunks
-    argument.
-
-    ``scratch_dir`` must be visible to every executor (any shared
-    filesystem; defaults to a local tempdir, which is exactly right on
-    local[...] and on a cluster must be overridden with e.g. an HDFS
-    or object-store path). Task-side reads go through pyarrow on the
-    plain path."""
+    #5): executors write the query side to parquet FILE GROUPS
+    (``write_query_groups``) and ``query_groups`` runs the chunk loop
+    over them — the driver handles only paths and never deserializes a
+    query string, so the driver NIC is off the data path at any
+    query-side scale. Scratch goes under
+    ``spark.prefixtree.filegroups.scratch`` (must be visible to every
+    executor on a real cluster); unset, a driver-local tempdir, which
+    is exactly right on local[...]. Removed when the call returns (the
+    result is pinned per group)."""
     import os
     import shutil
     import tempfile
-    import uuid as _uuid
+    import uuid
 
-    spark = pt.sparkSession
-    if chunk_size is None:
-        chunk_size = _AUTO_BROADCAST_QUERIES
-    chunk_size = max(1, chunk_size)
-    qcol = qdf.columns[0]
-    owned = None
-    if not colocated:
-        # colocate ONCE for all chunks — see _colocate_forests for the
-        # range-spread/AQE rationale
-        owned = pt = _colocate_forests(pt).persist()
-        pt.count()
-    if scratch_dir is None:
-        scratch_dir = spark.conf.get(
-            "spark.prefixtree.filegroups.scratch", None
-        )
-    own_scratch = scratch_dir is None
+    scratch = pt.sparkSession.conf.get("spark.prefixtree.filegroups.scratch", None)
     root = (
         tempfile.mkdtemp(prefix="ptq_filegroups_")
-        if own_scratch
-        else os.path.join(scratch_dir, f"ptq_filegroups_{_uuid.uuid4().hex}")
+        if scratch is None
+        else os.path.join(scratch, f"ptq_filegroups_{uuid.uuid4().hex}")
     )
     out_dir = os.path.join(root, "query_groups")
     try:
-        write_query_groups(qdf, qcol, out_dir, chunk_size=chunk_size)
-        return query_groups(pt, out_dir, k, colocated=True, _qcol=qcol)
+        write_query_groups(qdf, qdf.columns[0], out_dir, chunk_size=chunk_size)
+        return query_groups(pt, out_dir, k, colocated=colocated)
     finally:
-        if owned is not None:
-            owned.unpersist()
         shutil.rmtree(root, ignore_errors=True)
 
 
@@ -768,8 +714,6 @@ def write_query_groups(
     trees, distances, or index generations pays the distinct + write
     once and every ``query_groups`` call after that is pure traversal.
     Returns the number of file groups written."""
-    import os
-
     if chunk_size is None:
         chunk_size = _AUTO_BROADCAST_QUERIES
     chunk_size = max(1, chunk_size)
@@ -785,92 +729,40 @@ def write_query_groups(
 
 
 def query_groups(
-    pt: DataFrame,
-    path: str,
-    max_distance: int,
-    *,
-    colocated: bool = False,
-    max_concurrent: int = 2,
-    _qcol: str | None = None,
+    pt: DataFrame, path: str, max_distance: int, *, colocated: bool = False
 ) -> DataFrame:
     """Batch fuzzy search over a query side pre-written by
     ``write_query_groups`` — the both-sides-big strategy with the
-    driver off the data path, as a reusable public step. One colocated
-    zero-shuffle traversal of the (distributed) tree per file group;
-    each group's traversal tasks read the group file straight from
-    storage; per-group results are pinned eagerly and unioned. Same
-    result contract as ``query``: DataFrame[query_string, node,
-    final_distance].
+    driver off the data path, as a reusable public step. The chunk loop
+    runs one colocated zero-shuffle traversal of the (distributed) tree
+    per file group, two group jobs in flight; each group's traversal
+    tasks read the group file straight from storage; per-group results
+    are pinned eagerly and unioned. Same result contract as ``query``:
+    DataFrame[query_string, node, final_distance].
 
     ``path`` must be visible to every executor (shared storage on a
     real cluster). ``colocated=True`` promises ``pt`` is fresh from
     ``create``/``load_index`` — else the tree is colocated once here
-    for all groups.
-
-    ``max_concurrent`` group jobs run at once (driver threads
-    submitting independent Spark jobs): a strictly serial loop leaves
-    the cluster idle during each chunk's driver-side turnaround
-    (scheduling, checkpoint bookkeeping — the measured ~3 s/chunk
-    fixed cost, SCALING r12), and overlapping the NEXT group's job
-    into that gap hides it. Results are unioned in group order either
-    way, and each job pins its own result, so concurrency changes
-    wall-clock, never rows. Memory bound: ``max_concurrent`` in-flight
-    group reads (one group's strings per traversal task)."""
+    for all groups."""
     import os
 
-    k = int(max_distance)
-    spark = pt.sparkSession
     # refuse a partial write: a crashed/in-flight write_query_groups
     # leaves part files without the _SUCCESS marker, and serving those
     # would silently DROP every query in the unwritten groups — the
-    # worst failure mode for a correctness-critical join. (The interim
-    # filegroups mode path always writes then reads in-process, so its
-    # marker is guaranteed present.)
+    # worst failure mode for a correctness-critical join.
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         raise ValueError(
             f"query groups at {path!r} are incomplete (no _SUCCESS "
             "marker): write_query_groups did not finish — rerun it "
             "before serving queries from this directory"
         )
-    files = _list_query_groups(path)
-    if not files:
-        return spark.createDataFrame([], RESULT_SCHEMA)
-    if _qcol is None:
-        import pyarrow.parquet as pq
-
-        _qcol = pq.ParquetFile(files[0]).schema_arrow.names[0]
-    owned = None
-    if not colocated:
-        # see _colocate_forests for the range-spread/AQE rationale
-        owned = pt = _colocate_forests(pt).persist()
-        pt.count()
-    try:
-        cap = max(2, int(max_concurrent))
-        if max_concurrent <= 1 or len(files) == 1:
-            chunks = [
-                _query_filegroup(
-                    pt, f, _qcol, k, cache_capacity=cap
-                ).localCheckpoint(eager=True)
-                for f in files
-            ]
-        else:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(
-                max_workers=max(1, int(max_concurrent))
-            ) as pool:
-                chunks = list(
-                    pool.map(
-                        lambda f: _query_filegroup(
-                            pt, f, _qcol, k, cache_capacity=cap
-                        ).localCheckpoint(eager=True),
-                        files,
-                    )
-                )
-        return _union_all(chunks)
-    finally:
-        if owned is not None:
-            owned.unpersist()
+    return _chunk_loop(
+        pt,
+        _list_query_groups(path),
+        int(max_distance),
+        colocated=colocated,
+        in_flight=_FILEGROUP_IN_FLIGHT,
+    )
 
 
 def _list_query_groups(path: str) -> list[str]:
@@ -883,69 +775,40 @@ def _list_query_groups(path: str) -> list[str]:
     )
 
 
-# Per-WORKER memo of file-group query batches: every traversal task of
-# one chunk job reads the same group file and builds the same
-# QueryBatch; with reused python workers (spark.python.worker.reuse,
-# the default) the second and later tasks on a worker can skip both.
-# Keyed by (path, qcol, mtime_ns, size) so a rewritten group file can
-# never serve a stale batch. Capacity scales with the number of group
-# jobs interleaving tasks on one worker (query_groups passes its
-# max_concurrent — r13 advice: the hardcoded 2 silently thrashed the
-# LRU whenever a caller raised max_concurrent, every task rebuilding
-# its QueryBatch); memory bound is capacity x one chunk's QueryBatch
-# footprint per worker — the same order ``capacity`` concurrently
-# running tasks already hold today.
+# File-group jobs the chunk loop keeps in flight, and the capacity of
+# the per-WORKER memo of file-group query batches below: every
+# traversal task of one group job reads the same group file and builds
+# the same QueryBatch, and with reused python workers
+# (spark.python.worker.reuse, the default) the second and later tasks
+# on a worker skip both. Tasks of at most this many group jobs
+# interleave on one worker, so the LRU never thrashes; its memory bound
+# is this many chunks' QueryBatch per worker — the same order the
+# concurrently running tasks already hold. Keyed by (path, mtime_ns,
+# size) so a rewritten group file can never serve a stale batch.
+_FILEGROUP_IN_FLIGHT = 2
 _FILEGROUP_BATCH_CACHE: "OrderedDict[tuple, QueryBatch]" = OrderedDict()
-_FILEGROUP_BATCH_CAPACITY = 2
 
 
-def _filegroup_batch(
-    chunk_path: str, qcol: str, capacity: int = _FILEGROUP_BATCH_CAPACITY
-) -> QueryBatch:
+def _filegroup_batch(chunk_path: str) -> QueryBatch:
     import os
 
     st = os.stat(chunk_path)
-    key = (chunk_path, qcol, st.st_mtime_ns, st.st_size)
+    key = (chunk_path, st.st_mtime_ns, st.st_size)
     cached = _FILEGROUP_BATCH_CACHE.get(key)
     if cached is not None:
         _FILEGROUP_BATCH_CACHE.move_to_end(key)
         return cached
     import pyarrow.parquet as pq
 
+    # write_query_groups writes exactly one (the query) column
     strings = [
-        s
-        for s in pq.read_table(chunk_path, columns=[qcol]).column(0).to_pylist()
-        if s is not None
+        s for s in pq.read_table(chunk_path).column(0).to_pylist() if s is not None
     ]
     batch = QueryBatch(strings)
     _FILEGROUP_BATCH_CACHE[key] = batch
-    cap = max(int(capacity), _FILEGROUP_BATCH_CAPACITY)
-    while len(_FILEGROUP_BATCH_CACHE) > cap:
+    while len(_FILEGROUP_BATCH_CACHE) > _FILEGROUP_IN_FLIGHT:
         _FILEGROUP_BATCH_CACHE.popitem(last=False)
     return batch
-
-
-def _query_filegroup(
-    pt: DataFrame, chunk_path: str, qcol: str, k: int, cache_capacity: int = 2
-) -> DataFrame:
-    """One file-group chunk of ``_query_broadcast_queries_filegroups``:
-    the colocated per-forest traversal of ``_query_broadcast_queries``,
-    except each task reads the chunk's query strings from storage
-    instead of a driver broadcast. Only the path string rides the task
-    closure; the read + QueryBatch build are memoized per worker
-    (``_filegroup_batch``, LRU sized to the caller's job concurrency)."""
-
-    def run_partition(batches):
-        frames = [pdf for pdf in batches if len(pdf)]
-        if not frames:
-            return
-        batch = _filegroup_batch(chunk_path, qcol, cache_capacity)
-        if not len(batch):
-            return
-        pdf = pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
-        yield _traverse_pdf(pdf, batch, k)
-
-    return pt.mapInPandas(run_partition, schema=RESULT_SCHEMA)
 
 
 def reshard(pt: DataFrame, *, num_partitions: int | None = None) -> DataFrame:
@@ -1342,13 +1205,11 @@ def query(
         # hashed into parquet file groups executor-side and each
         # chunk's traversal tasks read their group straight from
         # storage — the driver never deserializes query text (the
-        # billions-of-queries scale path; see
-        # _query_broadcast_queries_filegroups). Opt-in: at the measured
-        # sf0.1 both-big shape the toLocalIterator chunk loop is
-        # equal-or-faster (SCALING r13), so auto keeps choosing it.
-        return _query_broadcast_queries_filegroups(
-            pt, qdf, k, colocated=colocated
-        )
+        # billions-of-queries scale path; see _query_filegroups).
+        # Opt-in: at the measured sf0.1 both-big shape the
+        # toLocalIterator chunk loop is equal-or-faster (SCALING r13),
+        # so auto keeps choosing it below _AUTO_FILEGROUP_QUERIES.
+        return _query_filegroups(pt, qdf, k, colocated=colocated)
     if mode == "auto":
         # persist so the size probe and the chosen strategy share one
         # tree materialization (the build is the expensive part); every
@@ -1418,34 +1279,21 @@ def query(
                 # instead of twice through the driver NIC (SCALING r13:
                 # flat driver RSS, ~equal wall, identical rows).
                 run_chunked = (
-                    _query_broadcast_queries_filegroups
+                    _query_filegroups
                     if n_q > _AUTO_FILEGROUP_QUERIES
-                    else _query_broadcast_queries_chunked
+                    else _query_funnel
                 )
                 per_part = n_nodes / max(1, pt.rdd.getNumPartitions())
                 if per_part <= _CHUNK_MAX_PARTITION_NODES:
-                    if colocated:
-                        return run_chunked(pt, qdf, k, colocated=True)
-                    # colocate HERE from the still-cached tree, then
-                    # release OUR pin before the chunk loop: letting
-                    # chunked pin its own copy while this frame's pt
-                    # stays persisted held TWO full cached trees for the
-                    # whole run — in exactly the regime defined by the
-                    # tree being too big to collect. Overlap now lasts
-                    # one repartition pass (caller-owned caches stay).
-                    # Range spread at explicit 2x N — see
-                    # _colocate_forests (hash-collision idle cores +
-                    # the r8 AQE-coalesce trap: both_big_auto_k2 44 s
-                    # vs 19 s when this exchange coalesced to ~1
-                    # partition).
-                    pt2 = _colocate_forests(pt).persist()
-                    try:
-                        pt2.count()
-                        if owned:
-                            pt.unpersist()
-                        return run_chunked(pt2, qdf, k, colocated=True)
-                    finally:
-                        pt2.unpersist()
+                    # colocate from the still-cached tree, then release
+                    # OUR pin before the chunk loop: holding it for the
+                    # whole run would keep TWO full cached trees in
+                    # exactly the regime defined by the tree being too
+                    # big to collect. Caller-owned caches stay.
+                    with _colocated_tree(
+                        pt, colocated, pt.unpersist if owned else None
+                    ) as tree:
+                        return run_chunked(tree, qdf, k, colocated=True)
                 # per-partition forests exceed a traversal task's
                 # budget: RE-SHARD instead of bfs (round-5 verdict #1 —
                 # bfs is the one plan measured to LOSE to brute force

@@ -152,22 +152,23 @@ def test_banded_traverse_equals_full_randomized():
 
 
 def test_banded_state_kernel_equals_row_kernel():
-    """The transposed (W, n) state kernel (r13: extend_state_banded /
-    state_row_mins / state_final_distances) must agree cell-for-cell
-    with the (n, W) row kernel it replaced in the traversal, across
+    """The transposed (W, n) state kernel (extend_state_banded /
+    state_row_mins / state_final_distances) must agree cell by cell
+    with the full-width row kernel (extend_rows / row_mins /
+    final_distances) on every in-window cell 0 ≤ j ≤ max_len, across
     random labels, path positions, and k — including windows that run
-    past the padded code matrix (the guaranteed-pruned zone)."""
+    past the padded code matrix (the guaranteed-pruned zone). The band
+    argument makes the contract exact where it matters: a cell ≤ k is
+    identical in both kernels, a cell > k is > k in both (so both are
+    compared clamped at k+1)."""
     import random
 
     import numpy as np
 
     from prefixtree_spark.functions.levenshtein import (
         QueryBatch,
-        banded_final_distances,
-        banded_initial_rows,
         banded_initial_state,
-        banded_row_mins,
-        extend_rows_banded,
+        extend_rows,
         extend_state_banded,
         state_final_distances,
         state_row_mins,
@@ -185,27 +186,42 @@ def test_banded_state_kernel_equals_row_kernel():
         W = 2 * k + 1
         batch = QueryBatch(queries)
         idx = np.arange(n)
+        lens = batch.lens[idx]
         padT = batch.codes_T_padded(k)
-        rows = banded_initial_rows(batch, k, n)
+        rows = batch.initial_rows()
         state = banded_initial_state(k, n)
-        assert (state.T == rows).all()
+
+        def clamp(a):
+            return np.minimum(a, k + 1)
+
+        def check(p):
+            for w in range(W):
+                j = p - k + w
+                if 0 <= j <= batch.max_len:
+                    assert (clamp(state[w]) == clamp(rows[:, j])).all(), (
+                        trial, p, k, j, queries,
+                    )
+            assert (
+                clamp(state_row_mins(lens, state, p, k))
+                == clamp(batch.row_mins(rows, idx))
+            ).all(), (trial, p, k)
+            fin = np.abs(lens - p) <= k
+            assert (
+                clamp(state_final_distances(lens[fin], state[:, fin], p, k))
+                == clamp(batch.final_distances(rows, idx)[fin])
+            ).all(), (trial, p, k)
+
         p = 0
+        check(p)
         for _ in range(rng.randint(1, 5)):
             label = "".join(
                 rng.choice(alpha) for _ in range(rng.randint(1, 6))
             )
-            rows = extend_rows_banded(batch, rows, idx, label, p, k)
+            rows = extend_rows(batch, rows, idx, label)
             padT_sub = padT[p : min(p + len(label) + W - 1, padT.shape[0]), :][
                 :, idx
             ]
             state = extend_state_banded(padT_sub, state, label, p, k)
             p += len(label)
-            assert (state.T == rows).all(), (trial, p, k, queries)
-            old_mins = banded_row_mins(batch, rows, idx, p, k)
-            new_mins = state_row_mins(batch.lens[idx], state, p, k)
-            assert (old_mins == new_mins).all(), (trial, p, k)
-            in_window = np.abs(batch.lens[idx] - p) <= k
-            if in_window.all():
-                old_fin = banded_final_distances(batch, rows, idx, p, k)
-                new_fin = state_final_distances(batch.lens[idx], state, p, k)
-                assert (old_fin == new_fin).all(), (trial, p, k)
+            check(p)
+

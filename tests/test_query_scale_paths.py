@@ -83,17 +83,17 @@ def test_auto_routes_big_tree_big_queries_to_chunked(spark, monkeypatch):
     import prefixtree_spark.operators.query as qmod
 
     chunk_sizes = []
-    # the chunk loop calls the (df, broadcast) internal so it can
-    # destroy each chunk's broadcast after the eager pin (r14)
-    real_bq = qmod._query_broadcast_queries_bc
+    # every chunk job goes through the one per-partition traversal; a
+    # funnel chunk's source is its broadcast query payload
+    real = qmod._traverse_forests
+
+    def spy(pt, source, *args, **kwargs):
+        chunk_sizes.append(len(source.value.queries))
+        return real(pt, source, *args, **kwargs)
+
     monkeypatch.setattr(qmod, "_AUTO_BROADCAST_NODES", 0)
     monkeypatch.setattr(qmod, "_AUTO_BROADCAST_QUERIES", 2)
-    monkeypatch.setattr(
-        qmod,
-        "_query_broadcast_queries_bc",
-        lambda pt, qs, k, **kw: chunk_sizes.append(len(qs))
-        or real_bq(pt, qs, k, **kw),
-    )
+    monkeypatch.setattr(qmod, "_traverse_forests", spy)
     monkeypatch.setattr(
         qmod,
         "_query_bfs",
@@ -473,13 +473,13 @@ def test_filegroups_mode_matches_other_modes(spark, monkeypatch):
 
     monkeypatch.setattr(qmod, "_AUTO_BROADCAST_QUERIES", 2)  # force >1 group
     group_paths = []
-    real_fg = qmod._query_filegroup
-    monkeypatch.setattr(
-        qmod,
-        "_query_filegroup",
-        lambda pt, path, qcol, k: group_paths.append(path)
-        or real_fg(pt, path, qcol, k),
-    )
+    real = qmod._traverse_forests
+
+    def spy(pt, source, *args, **kwargs):
+        group_paths.append(source)
+        return real(pt, source, *args, **kwargs)
+
+    monkeypatch.setattr(qmod, "_traverse_forests", spy)
     pt = create(_words_df(spark, SPARSE_WORDS), "word", num_partitions=3)
     qdf = spark.createDataFrame([(q,) for q in QUERIES], ["q"])
     monkeypatch.setattr(
@@ -493,6 +493,7 @@ def test_filegroups_mode_matches_other_modes(spark, monkeypatch):
     got = {(r.query_string, r.node, r.final_distance) for r in res.collect()}
     assert got == _expected(SPARSE_WORDS, QUERIES, 2)
     assert len(group_paths) >= 2  # genuinely chunked into file groups
+    assert all(isinstance(p, str) for p in group_paths)  # paths, no broadcast
 
 
 def test_filegroups_colocated_zero_shuffle(spark):
@@ -503,7 +504,7 @@ def test_filegroups_colocated_zero_shuffle(spark):
     pt = create(_words_df(spark, SPARSE_WORDS), "word", num_partitions=3).cache()
     pt.count()
     qdf = spark.createDataFrame([(q,) for q in QUERIES], ["q"])
-    res = qmod._query_broadcast_queries_filegroups(
+    res = qmod._query_filegroups(
         pt, qdf.select(F.col("q")).distinct(), 1, colocated=True
     )
     got = {(r.query_string, r.node, r.final_distance) for r in res.collect()}
@@ -541,16 +542,16 @@ def test_auto_routes_huge_query_side_to_filegroups(spark, monkeypatch):
     monkeypatch.setattr(qmod, "_AUTO_BROADCAST_QUERIES", 2)
     monkeypatch.setattr(qmod, "_AUTO_FILEGROUP_QUERIES", 2)
     group_paths = []
-    real_fg = qmod._query_filegroup
+    real = qmod._traverse_forests
+
+    def spy(pt, source, *args, **kwargs):
+        group_paths.append(source)
+        return real(pt, source, *args, **kwargs)
+
+    monkeypatch.setattr(qmod, "_traverse_forests", spy)
     monkeypatch.setattr(
         qmod,
-        "_query_filegroup",
-        lambda pt, path, qcol, k: group_paths.append(path)
-        or real_fg(pt, path, qcol, k),
-    )
-    monkeypatch.setattr(
-        qmod,
-        "_query_broadcast_queries_chunked",
+        "_query_funnel",
         lambda *a, **kw: pytest.fail(
             "auto used the driver-funnel chunk loop past the filegroup bound"
         ),
@@ -561,6 +562,7 @@ def test_auto_routes_huge_query_side_to_filegroups(spark, monkeypatch):
     got = {(r.query_string, r.node, r.final_distance) for r in res.collect()}
     assert got == _expected(SPARSE_WORDS, QUERIES, 1)
     assert len(group_paths) >= 2
+    assert all(isinstance(p, str) for p in group_paths)
 
 
 def test_query_groups_refuses_partial_write(spark, tmp_path):
