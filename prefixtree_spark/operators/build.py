@@ -647,23 +647,36 @@ def _read_index_meta(spark: SparkSession, path: str) -> int | None:
         return None  # pre-meta saves / foreign files: probe instead
 
 
-def _restore_colocation(df: DataFrame) -> DataFrame:
-    """Forest-per-partition colocation for a freshly read node table.
+def _colocate_forests(pt: DataFrame) -> DataFrame:
+    """Reshuffle a node table so each partition holds whole forests,
+    spread evenly — the one colocation every traversal relies on
+    (``load_index``/``load_published_index`` with ``colocated=True``,
+    the query chunk loop, and the one-shot distributed-tree route).
 
-    Range spread at an EXPLICIT 2x-parallelism count (r13): the
-    column-only ``repartition("compute_node")`` this used to be is an
-    AQE-coalesce trap — the node table's small byte size coalesces the
-    exchange to ONE partition (measured: a 36k-node sf0.1 index came
-    back as exactly 1 partition), so every subsequent colocated
-    traversal ran single-task. Range partitioning also avoids the
-    n-forests-into-n-buckets hash-collision idle (see query.py
-    ``_colocate_forests``); equal keys cannot straddle a range
-    boundary, so whole forests stay together."""
+    RANGE partitioning on compute_node at an EXPLICIT 2x-parallelism
+    count, never hash at 1x: the number of forests is ~the build
+    partition count, which is ~the partition count of THIS shuffle at
+    any scale, and murmur3 maps forest ids 0..n-1 into n buckets with
+    collisions — only 2/5/10/18/37 busy buckets of 4/8/16/32/64, up to
+    3-4 forests in one task while other cores idle (r13: 32 forests ->
+    18 of 32 tasks non-empty, chunk job 4.4-4.7 s). Range partitioning
+    separates keys near-perfectly and balances by sampled row counts;
+    2x buckets makes singleton-forest partitions the common case
+    (measured: 32/32 tasks busy, max task 4.2 -> 1.95 s, chunk job
+    2.2-2.7 s). Equal keys cannot straddle a range boundary, so the
+    whole-forest contract holds. The explicit N also dodges the
+    AQE-coalesce trap: a column-only ``repartition("compute_node")``
+    coalesces on the node table's small byte size to ~1 partition
+    (measured: a 36k-node sf0.1 index came back as exactly 1
+    partition), and every later traversal ran single-task.
+
+    The range bounds come from a sampling job over ``pt``, so the
+    shuffle reads ``pt`` twice: callers pin an expensive plan first."""
     n_part = 2 * max(
-        df.rdd.getNumPartitions(),
-        df.sparkSession.sparkContext.defaultParallelism,
+        pt.rdd.getNumPartitions(),
+        pt.sparkSession.sparkContext.defaultParallelism,
     )
-    return df.repartitionByRange(n_part, "compute_node")
+    return pt.repartitionByRange(n_part, "compute_node")
 
 
 def load_index(spark: SparkSession, path: str, *, colocated: bool = False) -> DataFrame:
@@ -674,7 +687,7 @@ def load_index(spark: SparkSession, path: str, *, colocated: bool = False) -> Da
     partitions at row-group boundaries)."""
     df = spark.read.parquet(path)
     if colocated:
-        df = _restore_colocation(df)
+        df = _colocate_forests(df)
     n = _read_index_meta(spark, path)
     if n is not None:
         set_n_forests_hint(df, n)
@@ -704,7 +717,7 @@ def load_published_index(
 
     df = read_published(spark, root)
     if colocated:
-        df = _restore_colocation(df)
+        df = _colocate_forests(df)
     return df
 
 

@@ -22,9 +22,13 @@ side may be the big one:
     stays distributed, each partition one or more whole forests
     (SURVEY.md §0), and ``_traverse_forests`` walks every partition
     once with ALL queries advancing together in one vectorized DP
-    (functions/levenshtein.py). Shuffle-free on the big side; the
-    inverted-index-style scale path for huge dictionaries. It is the
-    ONE per-partition traversal every distributed route below shares.
+    (functions/levenshtein.py). Shuffle-free on the big side when the
+    caller promises ``colocated=True``; otherwise ONE range repartition
+    on ``compute_node`` at 2x parallelism (``_colocate_forests``, the
+    only way forests are ever colocated) gives each forest its own
+    task. The inverted-index-style scale path for huge dictionaries,
+    and the ONE per-partition traversal every distributed route below
+    shares.
   - ``mode="broadcast_tree"``: the node table is collected+broadcast and
     queries stream through ``mapInPandas`` — the scale path for huge
     query sets over dictionaries that fit in executor memory.
@@ -70,6 +74,7 @@ from prefixtree_spark.functions.levenshtein import (
     extend_rows,
     extend_rows_multi,
 )
+from prefixtree_spark.operators.build import _colocate_forests
 from prefixtree_spark.plans.lifecycle import release_checkpoint
 from prefixtree_spark.plans.tree import VIRTUAL_ROOT_ID
 
@@ -440,31 +445,6 @@ def _union_all(frames: list[DataFrame]) -> DataFrame:
     return tree(fs)
 
 
-def _colocate_forests(pt: DataFrame) -> DataFrame:
-    """Reshuffle the node table so each partition holds whole forests,
-    spread evenly — the colocation shuffle ahead of a chunk loop.
-
-    RANGE partitioning at 2x parallelism, not hash at 1x (r13): the
-    number of forests is ~the build partition count, which is ~the
-    partition count of THIS shuffle at any scale — hashing n keys into
-    n buckets idles ~1/e of the cluster (measured at the bench both-big
-    shape: 32 forests -> only 18 of 32 tasks non-empty, chunk job
-    4.4-4.7 s). Range partitioning separates keys near-perfectly and
-    balances by sampled row counts; 2x buckets makes singleton-forest
-    partitions the common case (measured: 32/32 tasks busy, max task
-    4.2 -> 1.95 s, chunk job 2.2-2.7 s). Equal keys land in one range
-    partition, so the whole-forest contract holds. The explicit N also
-    dodges the AQE-coalesce trap (the node table's small byte size
-    otherwise coalesces to ~1 partition and the loop runs single-task).
-    The range sampling pass is one extra job, paid once per chunk LOOP,
-    never per chunk."""
-    n_part = 2 * max(
-        pt.rdd.getNumPartitions(),
-        pt.sparkSession.sparkContext.defaultParallelism,
-    )
-    return pt.repartitionByRange(n_part, "compute_node")
-
-
 @contextmanager
 def _colocated_tree(pt: DataFrame, colocated: bool, release):
     """Yield ``pt`` with every partition holding whole forests, for all
@@ -554,25 +534,36 @@ def _query_broadcast_queries(
     pt: DataFrame, query_strings: list[str], k: int, *, colocated: bool = False
 ) -> DataFrame:
     """One-shot distributed-tree route: the whole (collected) query
-    batch rides ONE broadcast to every forest.
+    batch rides ONE broadcast to every forest; the result is pinned
+    eagerly and the broadcast destroyed right after, as the chunk loop
+    does per chunk (reused Python workers otherwise keep the payload
+    and its memoized QueryBatch until ContextCleaner GC happens to
+    run).
 
     ``colocated=True`` promises every node row sits in the same Spark
     partition as its whole forest (true for a DataFrame fresh out of
     ``create`` and for ``load_index`` output) — then the traversal runs
-    in place with ZERO shuffle of the dictionary side. Otherwise an
-    EXPLICIT-count hash repartition on compute_node restores colocation
-    first — NOT groupBy().applyInPandas: AQE coalesces the group
-    exchange's small byte size to ~1 partition and applyInPandas then
-    runs one QueryBatch build + DP PER GROUP sequentially inside it
-    (measured: 14.5 s vs 1.4 s colocated at 14k queries × 32 forests)."""
-    spark = pt.sparkSession
-    bq = spark.sparkContext.broadcast(_QueryPayload(query_strings))
-    if not colocated:
-        n_part = max(
-            pt.rdd.getNumPartitions(), spark.sparkContext.defaultParallelism
-        )
-        pt = pt.repartition(n_part, "compute_node")
-    return _traverse_forests(pt, bq, k)
+    in place with ZERO shuffle of the dictionary side. Otherwise
+    ``_colocate_forests`` restores colocation first — range at 2x
+    parallelism, so each forest gets its own task (hash at 1x put 3 of
+    4 forests in one task; SCALING.md "One-shot distributed-tree route:
+    range colocation too") — NOT groupBy().applyInPandas:
+    AQE coalesces the group exchange's small byte size to ~1 partition
+    and applyInPandas then runs one QueryBatch build + DP PER GROUP
+    sequentially inside it (measured: 14.5 s vs 1.4 s colocated at 14k
+    queries × 32 forests). The range sampling job reads ``pt`` before
+    the shuffle does, so an unpinned tree is pinned for the call
+    (``_own_persist``: auto's pin or a caller's cache is reused, and
+    only a pin taken here is released)."""
+    pt, owned = (pt, False) if colocated else _own_persist(pt)
+    bq = pt.sparkSession.sparkContext.broadcast(_QueryPayload(query_strings))
+    try:
+        tree = pt if colocated else _colocate_forests(pt)
+        return _traverse_forests(tree, bq, k).localCheckpoint(eager=True)
+    finally:
+        bq.destroy()
+        if owned:
+            pt.unpersist()
 
 
 def _chunk_loop(
@@ -1136,7 +1127,10 @@ def query(
 
     ``colocated=True`` (safe for a tree fresh from ``create``) lets the
     distributed-tree strategy traverse in place with zero shuffle of
-    the dictionary side; see ``_query_broadcast_queries``.
+    the dictionary side. Otherwise that strategy first range-partitions
+    the tree on ``compute_node`` at 2x parallelism, so each forest gets
+    its own task; see ``_query_broadcast_queries``. That strategy's
+    result comes back pinned (an eager local checkpoint).
 
     ``tree_partitioned=True`` tells ``bfs`` mode that ``pt`` is already
     laid out on ``parent_id`` (e.g. via ``save_index_bucketed``), so it
@@ -1249,9 +1243,11 @@ def query(
                 # regime pays, not the common one.
                 rows = qdf.limit(_AUTO_BROADCAST_QUERIES + 1).collect()
                 if len(rows) <= _AUTO_BROADCAST_QUERIES:
+                    # the route pins its result, so OUR pin on pt can
+                    # go as soon as it returns
                     return _query_broadcast_queries(
                         pt, [r[0] for r in rows], k, colocated=colocated
-                    ).localCheckpoint(eager=True)
+                    )
                 return _query_broadcast_tree(
                     qdf, col, _merged_local_index(pt, n_nodes), k
                 )
@@ -1265,11 +1261,9 @@ def query(
             try:
                 n_q = qdf.count()
                 if n_q <= _AUTO_BROADCAST_QUERIES:
-                    # materialize the traversal off the cached tree, then
-                    # release it (the pinned result no longer needs pt)
                     return _query_broadcast_queries(
                         pt, [r[0] for r in qdf.collect()], k, colocated=colocated
-                    ).localCheckpoint(eager=True)
+                    )
                 # big tree x big query set: chunk the query side through
                 # the distributed-tree traversal (round-4 verdict #2 — bfs
                 # measurably loses to brute force here at k>=2). Past

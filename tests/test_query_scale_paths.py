@@ -15,13 +15,29 @@ def _plan(df):
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_colocated_zero_shuffle_plan_and_results(spark):
+def test_colocated_zero_shuffle_plan_and_results(spark, monkeypatch):
+    """colocated=True traverses in place. The route returns an eager
+    checkpoint, so the plan is read off the traversal frame itself."""
+    import prefixtree_spark.operators.query as qmod
+
+    traversed = []
+    real = qmod._traverse_forests
+
+    def spy(tree, *args, **kwargs):
+        out = real(tree, *args, **kwargs)
+        traversed.append(out)
+        return out
+
+    monkeypatch.setattr(qmod, "_traverse_forests", spy)
     pt = create(_words_df(spark, SPARSE_WORDS), "word", num_partitions=3).cache()
     pt.count()
     qdf = spark.createDataFrame([(q,) for q in QUERIES], ["q"])
     res = query(pt, qdf, "q", 2, mode="broadcast_queries", colocated=True)
+    assert len(traversed) == 1
+    plan = _plan(traversed[0])
+    assert "InMemoryTableScan" in plan
     # traversal side of the plan: no Exchange over the cached tree
-    assert "Exchange" not in _plan(res).split("InMemoryTableScan")[0]
+    assert "Exchange" not in plan.split("InMemoryTableScan")[0]
     got = {(r.query_string, r.node, r.final_distance) for r in res.collect()}
     assert got == _expected(SPARSE_WORDS, QUERIES, 2)
 

@@ -1,9 +1,15 @@
-"""Stale-name guard for the bench and tool scripts: every name they read
+"""Source guards, Spark-free (modules are imported or parsed, no
+session is started).
+
+Stale-name guard for the bench and tool scripts: every name they read
 from the query operator or the Levenshtein kernel module — attribute
 reads (and writes) through a module alias, and ``from ... import``
 names — must exist. Tests catch stale internals through
 ``monkeypatch.setattr(raising=True)``; nothing else runs these scripts.
-Spark-free: the modules are imported, no session is started."""
+
+Colocation guard: the package colocates forests only through the one
+range helper (``build._colocate_forests``); a hash ``repartition`` on
+``compute_node`` puts several forests into one task."""
 
 import ast
 import importlib
@@ -93,3 +99,44 @@ def test_scanner_flags_every_reference_form():
         "line 6: prefixtree_spark.operators.query._gone_b",
         "line 7: prefixtree_spark.functions.levenshtein.gone_c",
     ]
+
+
+def _compute_node_repartitions(source: str) -> list[int]:
+    """Lines of ``.repartition(...)`` calls whose arguments name the
+    ``compute_node`` column (as a string anywhere inside them)."""
+    lines = []
+    for node in ast.walk(ast.parse(source)):
+        if not (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "repartition"
+        ):
+            continue
+        args = [*node.args, *(kw.value for kw in node.keywords)]
+        if any(
+            isinstance(n, ast.Constant) and n.value == "compute_node"
+            for a in args
+            for n in ast.walk(a)
+        ):
+            lines.append(node.lineno)
+    return lines
+
+
+def test_no_hash_repartition_on_compute_node():
+    hits = [
+        f"{path.relative_to(ROOT)}:{line}"
+        for path in sorted((ROOT / "prefixtree_spark").rglob("*.py"))
+        for line in _compute_node_repartitions(path.read_text())
+    ]
+    assert not hits, f"hash repartition on compute_node: {hits}"
+
+
+def test_repartition_scanner_flags_every_form():
+    src = (
+        'df.repartition(4, "compute_node")\n'
+        'df.repartition(F.col("compute_node"))\n'
+        'df.repartition(n, "word")\n'
+        'df.repartitionByRange(8, "compute_node")\n'
+        'df.repartition(*["compute_node"])\n'
+    )
+    assert _compute_node_repartitions(src) == [1, 2, 5]
