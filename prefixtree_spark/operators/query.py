@@ -352,18 +352,21 @@ def _traverse_banded(
 #   k=2, 5000 q, 4.7k-node forest: banded 1.07 s vs full 3.1+ s (r13)
 #   k=2, 750 q, 1.3k-node forest:  banded 0.128 vs full 0.182 s (r13)
 #   k=1, 750 q, same forest:       banded 0.074 vs full 0.087 s (r13)
-#   k∈{1,2}, 100 q (serving):      full wins by ~10-15% (r13)
+#   k∈{1,2}, 100 q (search_many):  full wins by ~10-15% (r13)
 # So: banded iff k >= 1 AND the batch is big enough to keep active
 # sets array-sized through the walk (k=0 degenerates to a 1-cell
 # window where the full kernel's single row is already minimal).
+# Single lookups never come here: ``LocalIndex.search`` runs the
+# scalar ``_walk_one``.
 _BANDED_MIN_QUERIES = 1024
 
 
 def _traverse_auto(
     batch: QueryBatch, k: int, index: "LocalIndex"
 ) -> tuple[list[str], list[str], list[int]]:
-    """Kernel dispatch (see the measured regime table above); the two
-    kernels are result-identical (property-pinned)."""
+    """Batch kernel dispatch (see the measured regime table above); the
+    two kernels are result-identical (property-pinned). Batches only:
+    a single lookup takes the scalar ``_walk_one``."""
     if (
         k >= 1
         and len(batch) >= _BANDED_MIN_QUERIES
@@ -384,6 +387,65 @@ def _traverse_index(idx: "LocalIndex", batch: QueryBatch, k: int) -> pd.DataFram
     return pd.DataFrame(
         {"query_string": q, "node": w, "final_distance": pd.array(d, dtype="int32")}
     )
+
+
+def _walk_one(roots: list, s: str, k: int) -> list[tuple[str, int]]:
+    """Depth-first branch-and-bound for ONE query over
+    ``LocalIndex._walk_roots`` tuples: plain Python, one DP row per
+    node, only its Ukkonen window ``[p-k, p+k]`` computed. Cells
+    outside the window hold k+1, a lower bound on their true value, so
+    every cell ≤ k is exact (the clamp argument of the banded kernel).
+    Same pruning as ``_traverse``: the subtree length band
+    (PrefixTree.ecl:440-441), the row-minimum bound
+    (PrefixTree.ecl:426,434) — checked per char, since a row's minimum
+    never falls along a path — and the end-cap final-distance read.
+    Returns unordered (word, distance) hits."""
+    n = len(s)
+    big = k + 1
+    out: list[tuple[str, int]] = []
+    stack = [(roots, [j if j <= k else big for j in range(n + 1)], 0)]
+    while stack:
+        kids, row, p = stack.pop()
+        for label, lo, hi, sub in kids:
+            if n < lo - k or n > hi + k:
+                continue
+            if sub is None:
+                # end-cap: the path spells the word (p = len(word)) and
+                # the band put |n - p| <= k, so row[n] is in the window
+                d = row[n]
+                if d <= k:
+                    out.append((label, d))
+                continue
+            cur, q = row, p
+            for c in label:
+                q += 1
+                j_lo = q - k if q > k else 0
+                j_hi = q + k if q + k < n else n
+                if j_lo > j_hi:
+                    break
+                new = [big] * (n + 1)
+                if j_lo == 0:
+                    new[0] = m = q
+                    j_lo = 1
+                else:
+                    m = big
+                left = new[j_lo - 1]
+                for j in range(j_lo, j_hi + 1):
+                    v = cur[j - 1] + (c != s[j - 1])
+                    if cur[j] < v:
+                        v = cur[j] + 1
+                    if left < v:
+                        v = left + 1
+                    new[j] = left = v
+                    if v < m:
+                        m = v
+                cur = new
+                if m > k:
+                    break
+            else:
+                if sub:
+                    stack.append((sub, cur, q))
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -1322,8 +1384,9 @@ def query(
 class LocalIndex:
     """A collected, memory-resident node table for low-latency point
     queries — the honest Spark analog of Roxie serving a preloaded index
-    (SURVEY.md §3.3): no distributed job per query, just a driver-side
-    traversal over the same kernel."""
+    (SURVEY.md §3.3): no distributed job per query. A single lookup
+    (``search``) is one scalar walk; batches (``search_many``, the
+    broadcast and distributed paths) run the vectorized kernels."""
 
     def __init__(self, pt_pdf: pd.DataFrame, *, merge: bool = True):
         if merge:
@@ -1345,6 +1408,7 @@ class LocalIndex:
         self._kids_parents = uniq
         self._kids_offsets = np.append(starts, len(sp)).astype(np.int64)
         self._bc = None  # cached Spark broadcast (per-process, not pickled)
+        self._walk = None  # scalar-walk node tuples (built lazily, not pickled)
 
     def kids(self, parent_id: int):
         """Row positions of ``parent_id``'s children (build order), or
@@ -1355,13 +1419,16 @@ class LocalIndex:
         return self._kids_pos[self._kids_offsets[i] : self._kids_offsets[i + 1]]
 
     def __getstate__(self):
-        state = {s: getattr(self, s) for s in self.__slots__ if s != "_bc"}
+        state = {
+            s: getattr(self, s) for s in self.__slots__ if s not in ("_bc", "_walk")
+        }
         return state
 
     def __setstate__(self, state):
         for s, v in state.items():
             setattr(self, s, v)
         self._bc = None
+        self._walk = None
 
     __slots__ = (
         "ids",
@@ -1373,6 +1440,7 @@ class LocalIndex:
         "_kids_parents",
         "_kids_offsets",
         "_bc",
+        "_walk",
     )
 
     def spark_broadcast(self, spark: SparkSession):
@@ -1388,9 +1456,39 @@ class LocalIndex:
         return cls(pt.toPandas())
 
     def search(self, s: str, max_distance: int) -> list[tuple[str, int]]:
-        batch = QueryBatch([s])
-        _, words, dists = _traverse_auto(batch, int(max_distance), self)
-        return sorted(zip(words, dists))
+        """Every word within ``max_distance`` edits of ``s``, sorted —
+        one scalar walk (``_walk_one``), the reference's own per-query
+        loop (PrefixTree.ecl:459-539). A batch of one gains nothing
+        from the vectorized kernels and pays numpy dispatch per edge."""
+        roots = self._walk
+        if roots is None:
+            roots = self._walk_roots()
+        return sorted(_walk_one(roots, s, int(max_distance)))
+
+    def _walk_roots(self) -> list:
+        """Python-object view of the tree for ``_walk_one``: one
+        ``(label, _min, _max, children)`` tuple per node, ``children``
+        None on end-caps. Built on the first scalar lookup only —
+        broadcast and batch paths never pay for it — into locals, then
+        published by ONE attribute store, so concurrent first lookups
+        at worst build it twice."""
+        kid_lists = {p: [] for p in self._kids_parents.tolist()}
+        nodes = [
+            (label, lo, hi, None if word else kid_lists.get(i, []))
+            for label, lo, hi, word, i in zip(
+                self.labels.tolist(),
+                self.mins.tolist(),
+                self.maxs.tolist(),
+                self.is_word.tolist(),
+                self.ids.tolist(),
+            )
+        ]
+        parents = np.repeat(self._kids_parents, np.diff(self._kids_offsets))
+        for parent, pos in zip(parents.tolist(), self._kids_pos.tolist()):
+            kid_lists[parent].append(nodes[pos])
+        roots = kid_lists.get(VIRTUAL_ROOT_ID, [])
+        self._walk = roots
+        return roots
 
     def search_prefix(self, p: str) -> list[str]:
         """Sorted dictionary words starting with ``p`` — the trie's

@@ -49,7 +49,11 @@ across clients, not just across calls.
         tombstones — when a vector handle is loaded, and a ``sparse``
         section — generation, n_docs, n_buckets, preloaded,
         tombstones — when a BM25 handle is; sections ABSENT for
-        indexes not loaded, so a balancer can gate on readiness)
+        indexes not loaded, so a balancer can gate on readiness; and a
+        ``requests`` section — per endpoint path, the request count,
+        the non-2xx count and the summed in-handler seconds, unknown
+        paths pooled under ``other`` — so a client's round-trip time
+        minus handler time is transport time)
 
 Operationally (documented, not sandbox-testable beyond localhost):
 run one server per replica behind any HTTP load balancer; each
@@ -67,9 +71,17 @@ path only. A Spark Connect deployment can host the same handle
 server-side; nothing here depends on a SparkSession once the index
 is built.
 
-Threading: ``ThreadingHTTPServer`` + a read-only index — traversals
-(`LocalIndex.search`) allocate per-call state, so concurrent requests
-need no locks.
+Threading: ``ThreadingHTTPServer`` + a read-only index — lookups
+(``LocalIndex.search``, one scalar trie walk per query) allocate
+per-call state, so concurrent requests need no locks on the index. The
+walk's node tuples are built on the first lookup and published by one
+attribute store; concurrent first lookups at worst build them twice.
+The only lock guards the request counters: one update per request.
+
+Transport: handlers set TCP_NODELAY. A response leaves as two writes
+(headers, then body), and with Nagle's algorithm on, the second waits
+for the client's delayed ACK — ~40 ms on every keep-alive response,
+more than the lookup itself costs.
 """
 
 from __future__ import annotations
@@ -77,6 +89,7 @@ from __future__ import annotations
 import json
 import math
 import threading
+import time
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
@@ -132,6 +145,10 @@ class PrefixTreeServer:
         # version chain, live vs dead bytes, and vacuum debt via the
         # replica-side local_published_health (listing only, no scan)
         self._published_roots: dict[str, str] = {}
+        # per-endpoint [requests, non-2xx, in-handler seconds], read by
+        # /health: client time minus handler time is transport time
+        self._requests: dict[str, list] = {}
+        self._requests_lock = threading.Lock()
         self._host = host
         self._port = port
         self._httpd: ThreadingHTTPServer | None = None
@@ -171,6 +188,26 @@ class PrefixTreeServer:
         serving process has no SparkSession)."""
         self._published_roots[name] = root
 
+    def _count(self, path: str, status: "int | None", seconds: float) -> None:
+        """One request into its endpoint's counters; paths that name no
+        endpoint share one ``other`` entry, so clients cannot grow the
+        table."""
+        if path not in _ENDPOINTS:
+            path = "other"
+        failed = status is None or not 200 <= status < 300
+        with self._requests_lock:
+            c = self._requests.setdefault(path, [0, 0, 0.0])
+            c[0] += 1
+            c[1] += failed
+            c[2] += seconds
+
+    def _requests_snapshot(self) -> dict:
+        with self._requests_lock:
+            return {
+                p: {"count": n, "errors": e, "seconds": s}
+                for p, (n, e, s) in sorted(self._requests.items())
+            }
+
     def start(self) -> "PrefixTreeServer":
         if self._httpd is not None:
             # a second start() would abandon a live server with no
@@ -184,13 +221,29 @@ class PrefixTreeServer:
             # HTTP/1.1 persistent connections are free — without this
             # each "low-latency" lookup paid a fresh TCP handshake
             protocol_version = "HTTP/1.1"
+            # TCP_NODELAY: headers and body (send_error's too) go out
+            # as two writes; under Nagle the second one waits for the
+            # client's delayed ACK, ~40 ms on every keep-alive response
+            disable_nagle_algorithm = True
+
+            def send_response(self, code, message=None) -> None:
+                self._status = code
+                super().send_response(code, message)
 
             def do_GET(self) -> None:  # noqa: N802 (stdlib casing)
+                t0 = time.perf_counter()
+                self._status = None  # no response sent: an error
+                url = urlparse(self.path)
+                try:
+                    self._get(url)
+                finally:
+                    srv._count(url.path, self._status, time.perf_counter() - t0)
+
+            def _get(self, url) -> None:
                 # ONE handle read per request: a concurrent swap() must
                 # not let half a request run on the old index and half
                 # on the new
                 index = srv.index
-                url = urlparse(self.path)
                 q = {k: v[0] for k, v in parse_qs(url.query).items()}
                 try:
                     if url.path == "/health":
@@ -199,7 +252,10 @@ class PrefixTreeServer:
                         # cluster-side describe_* views (r10); handles
                         # read once above/here, so a concurrent swap
                         # can't report a mixed replica state
-                        body = {"nodes": int(len(index.ids))}
+                        body = {
+                            "nodes": int(len(index.ids)),
+                            "requests": srv._requests_snapshot(),
+                        }
                         h_ann = srv.ann_index
                         if h_ann is not None:
                             body["ann"] = {
@@ -420,6 +476,11 @@ class PrefixTreeServer:
 
     def __exit__(self, *exc) -> None:
         self.stop()
+
+
+_ENDPOINTS = frozenset(
+    ("/search", "/prefix", "/ann", "/sparse", "/hybrid", "/health")
+)
 
 
 def _req_int(q: dict, name: str, default: int, lo: int, hi: int) -> int:
