@@ -1,21 +1,31 @@
 """Incremental, batch-vectorized Levenshtein DP.
 
 This is the engine's replacement for the reference's embedded-C++ scalar
-kernels (SURVEY.md §2.8):
+kernels (SURVEY.md §2.8). The trie traversal (``operators/query.py``
+``_traverse``, every batch route) runs the banded state kernel:
 
-  - ``CalculateLevenshteinVector`` (PrefixTree.ecl:315-377) — resume the
-    DP from the saved row and extend it by one edge label. We keep the
-    same incremental idea (DP rows for a shared prefix are computed once
-    per path and reused across the subtree, PrefixTree.ecl:321-326) but
-    (a) vectorize ACROSS ALL QUERIES at once with numpy, so one trie
-    visit advances every active query's DP row in a single O(n_queries *
-    max_len) array op, and (b) fix the reference's latent first-call
-    ``memcpy`` bug (PrefixTree.ecl:368, SURVEY.md §0 Quirk 1) by always
-    carrying full-width rows.
-  - ``GetMinDistance`` (PrefixTree.ecl:379-386) → ``row_mins`` — min of
-    the current DP row = lower bound for branch-and-bound pruning.
-  - ``GetFinalDistance`` (PrefixTree.ecl:387-394) → ``final_distances``
-    — last valid DP cell = exact distance once the path spells a word.
+  - ``CalculateLevenshteinVector`` (PrefixTree.ecl:315-377) →
+    ``extend_state_banded`` — resume the DP from the saved state and
+    extend it by one edge label. We keep the same incremental idea (DP
+    state for a shared prefix is computed once per path and reused
+    across the subtree, PrefixTree.ecl:321-326) but (a) vectorize
+    ACROSS ALL QUERIES at once with numpy, so one trie visit advances
+    every active query's (2k+1)-cell Ukkonen window in a few
+    O(n_queries * (2k+1)) array ops, and (b) fix the reference's latent
+    first-call ``memcpy`` bug (PrefixTree.ecl:368, SURVEY.md §0 Quirk 1)
+    by always starting from a fully initialized state
+    (``banded_initial_state``).
+  - ``GetMinDistance`` (PrefixTree.ecl:379-386) → ``state_row_mins`` —
+    min of the valid window cells = lower bound for branch-and-bound
+    pruning.
+  - ``GetFinalDistance`` (PrefixTree.ecl:387-394) →
+    ``state_final_distances`` — the cell j = len(q) = exact distance
+    once the path spells a word.
+
+The full-row kernel (``extend_rows`` / ``QueryBatch.row_mins`` /
+``final_distances``, max_len+1 cells per query) stays for what needs
+whole rows: ``mode="bfs"`` (``extend_rows_multi``), ``levenshtein()``,
+and the tests' cell-by-cell reference for the banded kernel.
 
 Distances are per Unicode codepoint, not per byte as in ECL STRING
 (SURVEY.md §1.3). NB: DuckDB's ``levenshtein`` counts UTF-8 BYTES
@@ -154,11 +164,23 @@ def extend_rows(
 # The state is stored TRANSPOSED: shape (W, n) with W = 2k+1, so each
 # window cell w is one contiguous (n,) row. The r13 profile of the
 # both-big traversal put 80% of task time inside the earlier (n, W)
-# row layout, mostly numpy fixed costs (``ufunc.accumulate`` machinery
-# for the 5-cell insertion chain, per-edge fancy gathers, strided
-# column ops). Transposed, every per-char op is a handful of
-# contiguous-row ufunc calls and the insertion chain is W-1 explicit
-# ``minimum`` calls.
+# row layout, mostly numpy fixed costs (``ufunc.accumulate`` along
+# axis 1 for the 5-cell insertion chain, per-edge fancy gathers,
+# strided column ops), so the chain became 2(W-1) explicit row calls.
+# On the (W, n) layout one ``np.minimum.accumulate(axis=0)`` in
+# (cell - w) space does it instead. Per char, numpy 1.26, one core of
+# a shared 4-vCPU Xeon: k=2, n = 20 / 96 / 400 / 2000 active queries,
+# 2(W-1) calls 15.5 / 16.8 / 17.8 / 20.6 µs vs accumulate 1.9 / 4.9 /
+# 15.1 / 68.2 µs. Accumulate walks the short window axis once per
+# column, so it loses only where thousands of queries stay active;
+# whole traversals are pruning-bound and mostly run small active sets
+# (SCALING.md "One batch DP kernel": equal or faster at 96-2,000
+# queries, k=0..3, on the benchmark vocabulary). The buffers are
+# allocated C-ordered up front: the traversal's column selections
+# (``state[:, mask]``) return F-ordered copies, and ``state - ws`` or
+# ``empty_like`` would carry that order into every per-char op (1.3-2x
+# slower per edge at ~2,000 active queries); one ``np.subtract`` into
+# a C-ordered buffer transposes once per edge.
 
 
 def banded_initial_state(k: int, n: int) -> np.ndarray:
@@ -173,17 +195,11 @@ def state_row_mins(
     lens_sub: np.ndarray, state: np.ndarray, p: int, k: int
 ) -> np.ndarray:
     """Branch-and-bound lower bound over valid window cells (0 ≤ j ≤
-    len(q)) on the transposed state — per-row masked running min, no
-    (n, W) temporaries. ``lens_sub`` is ``batch.lens[idx]``."""
-    W = 2 * k + 1
-    out = np.full(state.shape[1], BIG, dtype=np.int32)
-    for w in range(W):
-        j = p - k + w
-        if j < 0:
-            continue
-        # masked min: only cells with j <= len(q) participate
-        np.minimum(out, state[w], out=out, where=lens_sub >= j)
-    return out
+    len(q)) on the transposed state — one masked min down the window
+    axis. ``lens_sub`` is ``batch.lens[idx]``."""
+    lo = max(0, k - p)  # window rows with j < 0 never count
+    js = np.arange(p - k + lo, p + k + 1, dtype=np.int32)
+    return state[lo:].min(axis=0, initial=BIG, where=js[:, None] <= lens_sub)
 
 
 def state_final_distances(
@@ -211,16 +227,19 @@ def extend_state_banded(
     ``padT_sub[t : t + W]``. ``p`` is the path length BEFORE the edge.
     Does not mutate ``state``; returns a fresh (W, n) array."""
     W = 2 * k + 1
+    ws = np.arange(W, dtype=np.int32)[:, None]
+    # the whole edge runs in (cell - w) space, where the insertion chain
+    # out[w] = min(out[w], out[w-1] + 1) is a running min down the
+    # window axis; w is subtracted once here and added back at the end
     n = state.shape[1]
-    buf_a = np.empty((W, n), dtype=np.int32)
-    buf_b = np.empty((W, n), dtype=np.int32)
+    cur = np.empty((W, n), dtype=np.int32)
+    np.subtract(state, ws, out=cur)
+    nxt = np.empty((W, n), dtype=np.int32)
     neq = np.empty((W, n), dtype=np.int32)
-    scratch = np.empty(n, dtype=np.int32)
     rows_avail = padT_sub.shape[0]
-    cur = state
     for t, ch in enumerate(label):
         c = ord(ch)
-        out = buf_a if cur is not buf_a else buf_b
+        out = nxt
         if t + W <= rows_avail:
             # (W, n) substitution costs: 1 where the window char differs
             np.not_equal(padT_sub[t : t + W], c, out=neq, casting="unsafe")
@@ -231,22 +250,21 @@ def extend_state_banded(
             neq.fill(1)
         # diag: (j-1, prev) sits at the SAME w after the window shift
         np.add(cur, neq, out=out)
-        # up: (j, prev) sits at w+1; w = W-1 has no up (outside window)
+        # up: (j, prev) sits at w+1 — cell + 1, i.e. +2 in shifted
+        # space; w = W-1 has no up (outside window)
         if W > 1:
-            np.add(cur[1:], 1, out=neq[: W - 1])  # reuse neq as scratch
+            np.add(cur[1:], 2, out=neq[: W - 1])  # reuse neq as scratch
             np.minimum(out[: W - 1], neq[: W - 1], out=out[: W - 1])
         # j == 0 boundary: distance(path, ε) = p+t+1; j < 0 is padding
         w0 = k - (p + t + 1)
         if w0 >= 0:
             if w0 < W:
-                out[w0] = p + t + 1
+                out[w0] = p + t + 1 - w0
             out[: min(w0, W)] = BIG
-        # insertion chain out[w] = min(out[w], out[w-1] + 1)
-        for w in range(1, W):
-            np.add(out[w - 1], 1, out=scratch)
-            np.minimum(out[w], scratch, out=out[w])
-        cur = out
-    return cur if cur is not state else state.copy()
+        np.minimum.accumulate(out, axis=0, out=out)
+        nxt, cur = cur, out
+    cur += ws
+    return cur
 
 
 def extend_rows_multi(

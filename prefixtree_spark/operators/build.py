@@ -53,16 +53,20 @@ from prefixtree_spark.plans.tree import (
 # NUL or other control characters.
 _END = object()
 
-# label, children dict, subtree min/max word length
-_LABEL, _CHILDREN, _MIN, _MAX = 0, 1, 2, 3
+# label, children dict (first char / _END -> node; None on end-caps),
+# subtree min/max word length, node id (None until ``_emit`` assigns
+# one — ``add_words``/``remove_words`` rebuild nodes with their ids)
+_LABEL, _CHILDREN, _MIN, _MAX, _ID = 0, 1, 2, 3, 4
 
 
-def _new_node(label: str) -> list:
-    return [label, {}, 0, 0]
+def _new_node(label: str, nid: int | None = None) -> list:
+    return [label, {}, 0, 0, nid]
 
 
 def _insert(root: list, word: str) -> None:
-    """Radix-trie insertion with edge splitting."""
+    """Radix-trie insertion with edge splitting; new nodes carry id
+    None. On a split the TAIL keeps the original node's id (its subtree
+    hangs unchanged below it); the new prefix node is fresh."""
     cur = root
     i = 0
     n = len(word)
@@ -83,33 +87,35 @@ def _insert(root: list, word: str) -> None:
             p += 1
         if p < len(label):
             # split: child becomes [label[:p]] -> [label[p:]]
-            tail = _new_node(label[p:])
-            tail[_CHILDREN] = child[_CHILDREN]
+            tail = [label[p:], child[_CHILDREN], child[_MIN], child[_MAX], child[_ID]]
             child[_LABEL] = label[:p]
-            child[_CHILDREN] = {label[p] : tail}
+            child[_CHILDREN] = {label[p]: tail}
+            child[_ID] = None
         cur = child
         i += p
     # end-cap carries the ENTIRE word (PrefixTree.ecl:280,283)
-    cur[_CHILDREN][_END] = [word, None, n, n]
+    if _END not in cur[_CHILDREN]:
+        cur[_CHILDREN][_END] = [word, None, n, n, None]
 
 
-def _emit_rows(
-    root: list, pid: int, counts: dict[str, int] | None = None
+def _emit(
+    root: list, pid: int, next_id: int, counts: dict[str, int] | None = None
 ) -> Iterator[tuple]:
-    """Assign ids (block offset pid*1e14, PrefixTree.ecl:172-181),
-    compute subtree _min/_max word-length bounds (PrefixTree.ecl:270-271,
-    292-293), and yield PTLayout rows iteratively (no recursion — word
-    length is unbounded only by the configured cap).
+    """Compute subtree _min/_max word-length bounds (PrefixTree.ecl:
+    270-271, 292-293) and yield PTLayout rows iteratively (no recursion
+    — word length is unbounded only by the configured cap). Nodes keep
+    their ids; id-less nodes take ``next_id`` upward in pre-order — a
+    fresh build passes the partition block's first id (pid*1e14 + 1,
+    PrefixTree.ecl:172-181), an incremental rebuild the block's first
+    unused one.
 
     With ``counts`` (keep_duplicates mode) every row gains an
     ``n_copies`` column: the word's input multiplicity at end-caps
     (compressing the reference's n identical end-cap nodes,
     PrefixTree.ecl:205-208, into one row + count), 1 elsewhere."""
-    base = pid * ID_BLOCK
-    next_id = 1
-
-    # iterative post-order to fill _MIN/_MAX
-    stack = [(root, False)]
+    # iterative post-order to fill _MIN/_MAX; the virtual root is never
+    # emitted, so the pass starts at its children (an empty tree has none)
+    stack = [(c, False) for c in root[_CHILDREN].values()]
     while stack:
         node, done = stack.pop()
         if node[_CHILDREN] is None:  # end-cap: already has min=max=len
@@ -128,8 +134,10 @@ def _emit_rows(
     stack2 = [(c, 0) for c in reversed(list(root[_CHILDREN].values()))]
     while stack2:
         node, parent = stack2.pop()
-        nid = base + next_id
-        next_id += 1
+        nid = node[_ID]
+        if nid is None:
+            nid = node[_ID] = next_id
+            next_id += 1
         is_word = node[_CHILDREN] is None
         row = (nid, parent, node[_MAX], node[_MIN], is_word, pid, node[_LABEL])
         if counts is not None:
@@ -172,7 +180,7 @@ def _stream_build_sorted(
 
     ``keep_duplicates``: duplicates are ADJACENT in sorted order, so
     counting a run costs zero memory; rows gain ``n_copies`` (the
-    word's multiplicity at end-caps, 1 elsewhere — see ``_emit_rows``).
+    word's multiplicity at end-caps, 1 elsewhere — see ``_emit``).
     """
     base = pid * ID_BLOCK
     next_id = base + 1
@@ -272,30 +280,6 @@ def _build_partition_streaming(
         yield pd.DataFrame(buf, columns=columns)
 
 
-def _build_partition(
-    batches: Iterator[pd.DataFrame], *, keep_duplicates: bool = False
-) -> Iterator[pd.DataFrame]:
-    from pyspark import TaskContext
-
-    pid = TaskContext.get().partitionId()
-    root = _new_node("")
-    counts: dict[str, int] = {}
-    for pdf in batches:
-        for word in pdf["word"]:
-            n = counts.get(word)
-            if n is None:
-                counts[word] = 1
-                _insert(root, word)
-            else:
-                counts[word] = n + 1
-    if not counts:
-        return
-    rows = list(_emit_rows(root, pid, counts if keep_duplicates else None))
-    out = pd.DataFrame(rows, columns=PT_COLUMNS_DUP if keep_duplicates else PT_COLUMNS)
-    for start in range(0, len(out), 100_000):
-        yield out.iloc[start : start + 100_000]
-
-
 # Per-unique-word memory estimate for the in-memory radix builder: the
 # word's chars plus the Python-object overhead of its trie footprint
 # (an end-cap list + its share of internal nodes/dict slots — measured
@@ -382,8 +366,8 @@ def _build_partition_auto(
     runs, then k-way-merge the runs into the O(max word length)
     streaming LCP builder (``_stream_build_sorted``). Memory is bounded
     by the budget regardless of partition size; under-budget partitions
-    take EXACTLY the memory builder's path (bit-identical output), so
-    the fallback costs nothing when it doesn't trigger."""
+    never leave the in-memory trie (``_insert`` + ``_emit``), so the
+    fallback costs nothing when it doesn't trigger."""
     import heapq
     import itertools
     import shutil
@@ -413,8 +397,10 @@ def _build_partition_auto(
     if not overflow:
         if not counts:
             return
-        rows = list(_emit_rows(root, pid, counts if keep_duplicates else None))
-        out = pd.DataFrame(rows, columns=columns)
+        rows = _emit(
+            root, pid, pid * ID_BLOCK + 1, counts if keep_duplicates else None
+        )
+        out = pd.DataFrame(list(rows), columns=columns)
         for start in range(0, len(out), 100_000):
             yield out.iloc[start : start + 100_000]
         return
@@ -502,13 +488,10 @@ def create(
     default ``spark.python.worker.memory``), then spills sorted runs
     and finishes through the streaming LCP builder — so a mis-sized
     partition at 100 TB degrades to disk, never to a worker OOM;
-    ``"memory"`` holds one partition's trie unconditionally — fastest
-    when the caller KNOWS partitions fit; ``"streaming"`` adds a
-    partition-local Spark sort and builds in ONE LCP scan with O(max
-    word length) memory (the reference's own scan formulation, ITERATE
-    + NORMALIZE + ROLLUP, PrefixTree.ecl:140-299). All emit logically
-    identical trees (tested); under-budget ``"auto"`` partitions take
-    exactly the ``"memory"`` code path (bit-identical output).
+    ``"streaming"`` adds a partition-local Spark sort and builds in ONE
+    LCP scan with O(max word length) memory (the reference's own scan
+    formulation, ITERATE + NORMALIZE + ROLLUP, PrefixTree.ecl:140-299).
+    Both emit logically identical trees (tested).
 
     Returns DataFrame[id, parent_id, _max, _min, is_word, compute_node,
     node]. Words longer than ``max_word_len`` (reference envelope: 255,
@@ -565,25 +548,17 @@ def create(
             ),
             n,
         )
-    if builder == "auto":
-        budget = builder_budget_bytes
-        return set_n_forests_hint(
-            words.mapInPandas(
-                lambda it: _build_partition_auto(
-                    it, keep_duplicates=keep_duplicates, budget_bytes=budget
-                ),
-                schema=schema,
-            ),
-            n,
-        )
-    if builder != "memory":
+    if builder != "auto":
         raise ValueError(f"unknown builder {builder!r}")
     # the build KNOWS its forest count (the repartition N) — hint it so
     # the delta paths (add_words/remove_words plan gates + routing)
     # skip their per-call max(compute_node) probe job
+    budget = builder_budget_bytes
     return set_n_forests_hint(
         words.mapInPandas(
-            lambda it: _build_partition(it, keep_duplicates=keep_duplicates),
+            lambda it: _build_partition_auto(
+                it, keep_duplicates=keep_duplicates, budget_bytes=budget
+            ),
             schema=schema,
         ),
         n,

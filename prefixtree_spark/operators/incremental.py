@@ -27,12 +27,22 @@ with zero coordination, exactly as in ``create``.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+# one radix trie and one trim dispatch, shared with create: a build and
+# its deltas can never disagree on a node layout or on which word a
+# string spells
+from prefixtree_spark.operators.build import (
+    _CHILDREN,
+    _END,
+    _LABEL,
+    _emit,
+    _insert,
+    _new_node,
+    _trim_fn,
+)
 from prefixtree_spark.plans.tree import (
     ID_BLOCK,
     PT_COLUMNS,
@@ -41,25 +51,16 @@ from prefixtree_spark.plans.tree import (
     set_n_forests_hint,
 )
 
-# node = [label, children dict (first char / _END -> node), min, max, id]
-# id is None for nodes created by this delta insert.
-_LABEL, _CHILDREN, _MIN, _MAX, _ID = 0, 1, 2, 3, 4
-_END = object()
-
-
-def _node(label: str, nid: int | None = None) -> list:
-    return [label, {}, 0, 0, nid]
-
 
 def _rebuild(rows: pd.DataFrame) -> list:
     """Reconstruct the partition's radix forest from its PTLayout rows
     (labels + parent links are a complete encoding; ids are preserved
     on the rebuilt nodes)."""
-    root = _node("")
+    root = _new_node("")
     nodes: dict[int, list] = {}
     internal = rows[~rows["is_word"]]
     for nid, label in zip(internal["id"], internal["node"]):
-        nodes[int(nid)] = _node(label, int(nid))
+        nodes[int(nid)] = _new_node(label, int(nid))
     for nid, parent_id, is_word, label, mn, mx in zip(
         rows["id"], rows["parent_id"], rows["is_word"],
         rows["node"], rows["_min"], rows["_max"],
@@ -72,74 +73,6 @@ def _rebuild(rows: pd.DataFrame) -> list:
             child = nodes[int(nid)]
             parent[_CHILDREN][child[_LABEL][0]] = child
     return root
-
-
-def _insert(root: list, word: str) -> None:
-    """Radix insertion with edge splitting; new nodes carry id None.
-    On a split the TAIL keeps the original node's id (its subtree
-    hangs unchanged below it); the new prefix node is fresh."""
-    cur = root
-    i = 0
-    n = len(word)
-    while i < n:
-        first = word[i]
-        child = cur[_CHILDREN].get(first)
-        if child is None:
-            child = _node(word[i:])
-            cur[_CHILDREN][first] = child
-            cur = child
-            i = n
-            break
-        label = child[_LABEL]
-        p = 0
-        max_p = min(len(label), n - i)
-        while p < max_p and label[p] == word[i + p]:
-            p += 1
-        if p < len(label):
-            tail = [label[p:], child[_CHILDREN], child[_MIN], child[_MAX], child[_ID]]
-            child[_LABEL] = label[:p]
-            child[_CHILDREN] = {label[p]: tail}
-            child[_ID] = None  # the prefix is a NEW node
-        cur = child
-        i += p
-    if _END not in cur[_CHILDREN]:
-        cur[_CHILDREN][_END] = [word, None, n, n, None]
-
-
-def _emit(root: list, pid: int, next_id: int) -> Iterator[tuple]:
-    """Recompute subtree _min/_max bottom-up, then emit all rows,
-    keeping surviving ids and allocating fresh ones from ``next_id``
-    upward (the partition block's unused range)."""
-    stack = [(root, False)]
-    while stack:
-        node, done = stack.pop()
-        if node[_CHILDREN] is None:
-            continue
-        if not done:
-            stack.append((node, True))
-            for c in node[_CHILDREN].values():
-                stack.append((c, False))
-        else:
-            kids = node[_CHILDREN].values()
-            node[_MIN] = min(c[_MIN] for c in kids)
-            node[_MAX] = max(c[_MAX] for c in kids)
-
-    def assign(node: list) -> int:
-        nonlocal next_id
-        if node[_ID] is None:
-            node[_ID] = next_id
-            next_id += 1
-        return node[_ID]
-
-    stack2 = [(c, 0) for c in reversed(list(root[_CHILDREN].values()))]
-    while stack2:
-        node, parent = stack2.pop()
-        nid = assign(node)
-        is_word = node[_CHILDREN] is None
-        yield (nid, parent, node[_MAX], node[_MIN], is_word, pid, node[_LABEL])
-        if not is_word:
-            for c in reversed(list(node[_CHILDREN].values())):
-                stack2.append((c, nid))
 
 
 def _remove(root: list, word: str) -> bool:
@@ -173,10 +106,6 @@ def _remove(root: list, word: str) -> bool:
         del parent[_CHILDREN][k]
         node = parent
     return True
-
-
-from prefixtree_spark.operators.build import _trim_fn  # noqa: E402 — one
-# shared trim dispatch: build and deltas can never disagree on a mode
 
 
 def remove_words(
@@ -414,7 +343,7 @@ def add_words(
             return old[PT_COLUMNS]
         fresh = set(new["word"])
         if len(old) == 0:
-            root = _node("")
+            root = _new_node("")
             next_id = pid * ID_BLOCK + 1
         else:
             existing = set(old.loc[old["is_word"], "node"])

@@ -7,6 +7,12 @@ query string, return every dictionary word within ``max_distance``
 Levenshtein edits, as rows (query_string, node, final_distance) — the
 reference's output projection (PrefixTree.ecl:445).
 
+Two traversal kernels, one per query shape: ``_traverse`` walks a
+forest with a whole batch (every batch route, ``search_many``);
+``_walk_one`` walks it with one query (``LocalIndex.search``, so
+``query_one`` and the serving replica). ``mode="bfs"`` advances its
+frontier rows with the full-row ``extend_rows_multi`` instead.
+
 Pruning is exactly the reference's (SURVEY.md §4 O5/O6):
   - branch-and-bound: stop descending when min of the DP row > k
     (PrefixTree.ecl:426,434);
@@ -21,8 +27,9 @@ side may be the big one:
   - distributed tree (``mode="broadcast_queries"``): the node table
     stays distributed, each partition one or more whole forests
     (SURVEY.md §0), and ``_traverse_forests`` walks every partition
-    once with ALL queries advancing together in one vectorized DP
-    (functions/levenshtein.py). Shuffle-free on the big side when the
+    once with ALL queries advancing together through ``_traverse``,
+    the one batch kernel (a 2k+1-cell Ukkonen window per query,
+    functions/levenshtein.py). Shuffle-free on the big side when the
     caller promises ``colocated=True``; otherwise ONE range repartition
     on ``compute_node`` at 2x parallelism (``_colocate_forests``, the
     only way forests are ever colocated) gives each forest its own
@@ -71,8 +78,11 @@ from pyspark.sql import types as T
 
 from prefixtree_spark.functions.levenshtein import (
     QueryBatch,
-    extend_rows,
+    banded_initial_state,
     extend_rows_multi,
+    extend_state_banded,
+    state_final_distances,
+    state_row_mins,
 )
 from prefixtree_spark.operators.build import _colocate_forests
 from prefixtree_spark.plans.lifecycle import release_checkpoint
@@ -85,7 +95,7 @@ def merge_forests(pt_pdf: pd.DataFrame) -> pd.DataFrame:
     once collected to a single host that layout only multiplies
     traversal work on shared prefixes, so the serving/broadcast paths
     re-merge. Cost: one in-memory rebuild over the end-cap words."""
-    from prefixtree_spark.operators.build import _emit_rows, _insert, _new_node
+    from prefixtree_spark.operators.build import _emit, _insert, _new_node
     from prefixtree_spark.plans.tree import PT_COLUMNS
 
     words = pt_pdf.loc[pt_pdf["is_word"], "node"]
@@ -95,7 +105,7 @@ def merge_forests(pt_pdf: pd.DataFrame) -> pd.DataFrame:
         if w not in seen:
             seen.add(w)
             _insert(root, w)
-    return pd.DataFrame(list(_emit_rows(root, 0)), columns=PT_COLUMNS)
+    return pd.DataFrame(list(_emit(root, 0, 1)), columns=PT_COLUMNS)
 
 
 RESULT_SCHEMA = T.StructType(
@@ -192,82 +202,17 @@ def _merged_local_index(pt: DataFrame, n_nodes: int | None = None) -> "LocalInde
 def _traverse(
     batch: QueryBatch, k: int, index: "LocalIndex"
 ) -> tuple[list[str], list[str], list[int]]:
-    """Depth-first branch-and-bound over one forest, all queries at once.
-
-    The stack carries (node position or root marker, active query
-    indices, their DP rows). Each visited edge advances EVERY active
-    query's DP row in one vectorized ``extend_rows`` call — the batch
-    analogue of the reference's per-row LOOP body (PrefixTree.ecl:430-442).
-    """
-    out_q: list[str] = []
-    out_w: list[str] = []
-    out_d: list[int] = []
-    roots = index.kids(VIRTUAL_ROOT_ID)
-    if not len(batch) or roots is None:
-        return out_q, out_w, out_d
-    ids, labels = index.ids, index.labels
-    is_word, mins, maxs = index.is_word, index.mins, index.maxs
-
-    all_idx = np.arange(len(batch))
-    init_rows = batch.initial_rows()
-    qlens = batch.lens
-
-    # stack entries: (child positions to expand, active idx, rows)
-    stack: list[tuple[np.ndarray, np.ndarray, np.ndarray]] = [
-        (roots, all_idx, init_rows)
-    ]
-    while stack:
-        kid_positions, idx, rows = stack.pop()
-        for pos in kid_positions:
-            lo, hi = int(mins[pos]), int(maxs[pos])
-            # subtree length band (PrefixTree.ecl:440-441)
-            band = (qlens[idx] >= lo - k) & (qlens[idx] <= hi + k)
-            if not band.any():
-                continue
-            sub_idx = idx[band]
-            sub_rows = rows[band]
-            if is_word[pos]:
-                # end-cap: the path already spells the whole word; the
-                # label is the full word (PrefixTree.ecl:280) — read the
-                # exact distance, no DP extension.
-                finals = batch.final_distances(sub_rows, sub_idx)
-                hit = finals <= k
-                if hit.any():
-                    word = labels[pos]
-                    for qi, d in zip(sub_idx[hit], finals[hit]):
-                        out_q.append(batch.queries[qi])
-                        out_w.append(word)
-                        out_d.append(int(d))
-                continue
-            new_rows = extend_rows(batch, sub_rows, sub_idx, labels[pos])
-            # branch-and-bound (PrefixTree.ecl:426,434)
-            alive = batch.row_mins(new_rows, sub_idx) <= k
-            if alive.any():
-                kids = index.kids(int(ids[pos]))
-                if kids is not None:
-                    stack.append((kids, sub_idx[alive], new_rows[alive]))
-    return out_q, out_w, out_d
-
-
-def _traverse_banded(
-    batch: QueryBatch, k: int, index: "LocalIndex"
-) -> tuple[list[str], list[str], list[int]]:
-    """``_traverse`` on the Ukkonen-banded kernel: DP windows of 2k+1
-    cells instead of max_len+1 full rows (functions/levenshtein.py
-    banded block — profile showed 86% of traversal time inside the
-    full-width ``extend_rows`` at k=2 over ~38-char rows, most of it
-    arithmetic on cells the band proves are > k). Stack entries carry
-    the parent path length ``p``; the end-cap read relies on the same
-    invariant the full path does — an end-cap's parent path spells the
-    whole word, and the length band has already enforced
-    |len(q) - p| ≤ k, so the final cell is in window."""
-    from prefixtree_spark.functions.levenshtein import (
-        banded_initial_state,
-        extend_state_banded,
-        state_final_distances,
-        state_row_mins,
-    )
-
+    """THE batch kernel: depth-first branch-and-bound over one forest,
+    all queries at once. Each visited edge advances every active
+    query's Ukkonen window — 2k+1 DP cells, not max_len+1 full rows
+    (functions/levenshtein.py banded block) — in one
+    ``extend_state_banded`` call, the batch analogue of the reference's
+    per-row LOOP body (PrefixTree.ecl:430-442). Pruning: the subtree
+    length band (PrefixTree.ecl:440-441) and the row-minimum bound
+    (PrefixTree.ecl:426,434). Stack entries carry the parent path
+    length ``p``; an end-cap's parent path spells the whole word and
+    the length band has already enforced |len(q) - p| ≤ k, so the
+    final cell is in window."""
     out_q: list[str] = []
     out_w: list[str] = []
     out_d: list[int] = []
@@ -322,68 +267,20 @@ def _traverse_banded(
             new_state = extend_state_banded(padT_sub, sub_state, label, p, k)
             new_p = p + len(label)
             alive = state_row_mins(sub_lens, new_state, new_p, k) <= k
-            if alive.all():
-                kids = index.kids(int(ids[pos]))
-                if kids is not None:
-                    stack.append((kids, sub_idx, sub_lens, new_state, new_p))
-            elif alive.any():
-                kids = index.kids(int(ids[pos]))
-                if kids is not None:
-                    stack.append(
-                        (
-                            kids,
-                            sub_idx[alive],
-                            sub_lens[alive],
-                            new_state[:, alive],
-                            new_p,
-                        )
-                    )
+            if not alive.any():
+                continue
+            kids = index.kids(int(ids[pos]))
+            if kids is None:
+                continue
+            if not alive.all():
+                sub_idx, sub_lens = sub_idx[alive], sub_lens[alive]
+                new_state = new_state[:, alive]
+            stack.append((kids, sub_idx, sub_lens, new_state, new_p))
     return out_q, out_w, out_d
 
 
-# Banded-kernel dispatch: the band wins where DP element count
-# dominates (large still-active sets over many edges) and loses where
-# per-edge numpy fixed costs dominate (small batches, where
-# branch-and-bound collapses the active set within a few edges).
-# Measured on the r8 fixtures with the (n, W) row kernel, re-measured
-# r13 after the transposed (W, n) state kernel cut the banded per-edge
-# fixed cost ~3x (contiguous-row ufuncs + manual insertion chain
-# replacing ufunc.accumulate):
-#   k=2, 5000 q, 4.7k-node forest: banded 1.07 s vs full 3.1+ s (r13)
-#   k=2, 750 q, 1.3k-node forest:  banded 0.128 vs full 0.182 s (r13)
-#   k=1, 750 q, same forest:       banded 0.074 vs full 0.087 s (r13)
-#   k∈{1,2}, 100 q (search_many):  full wins by ~10-15% (r13)
-# So: banded iff k >= 1 AND the batch is big enough to keep active
-# sets array-sized through the walk (k=0 degenerates to a 1-cell
-# window where the full kernel's single row is already minimal).
-# Single lookups never come here: ``LocalIndex.search`` runs the
-# scalar ``_walk_one``.
-_BANDED_MIN_QUERIES = 1024
-
-
-def _traverse_auto(
-    batch: QueryBatch, k: int, index: "LocalIndex"
-) -> tuple[list[str], list[str], list[int]]:
-    """Batch kernel dispatch (see the measured regime table above); the
-    two kernels are result-identical (property-pinned). Batches only:
-    a single lookup takes the scalar ``_walk_one``."""
-    if (
-        k >= 1
-        and len(batch) >= _BANDED_MIN_QUERIES
-        and 2 * k + 1 < batch.max_len + 1
-    ):
-        return _traverse_banded(batch, k, index)
-    return _traverse(batch, k, index)
-
-
-def _traverse_pdf(
-    pt_pdf: pd.DataFrame, batch: QueryBatch, k: int
-) -> pd.DataFrame:
-    return _traverse_index(LocalIndex(pt_pdf, merge=False), batch, k)
-
-
 def _traverse_index(idx: "LocalIndex", batch: QueryBatch, k: int) -> pd.DataFrame:
-    q, w, d = _traverse_auto(batch, k, idx)
+    q, w, d = _traverse(batch, k, idx)
     return pd.DataFrame(
         {"query_string": q, "node": w, "final_distance": pd.array(d, dtype="int32")}
     )
@@ -587,7 +484,7 @@ def _traverse_forests(pt: DataFrame, source, k: int) -> DataFrame:
         if not len(batch):
             return
         pdf = pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
-        yield _traverse_pdf(pdf, batch, k)
+        yield _traverse_index(LocalIndex(pdf, merge=False), batch, k)
 
     return pt.mapInPandas(run_partition, schema=RESULT_SCHEMA)
 
@@ -1385,8 +1282,9 @@ class LocalIndex:
     """A collected, memory-resident node table for low-latency point
     queries — the honest Spark analog of Roxie serving a preloaded index
     (SURVEY.md §3.3): no distributed job per query. A single lookup
-    (``search``) is one scalar walk; batches (``search_many``, the
-    broadcast and distributed paths) run the vectorized kernels."""
+    (``search``) is one scalar walk (``_walk_one``); batches
+    (``search_many``, the broadcast and distributed paths) run the
+    batch kernel ``_traverse``."""
 
     def __init__(self, pt_pdf: pd.DataFrame, *, merge: bool = True):
         if merge:
@@ -1500,13 +1398,14 @@ class LocalIndex:
     def search_many(
         self, queries: list[str], max_distance: int
     ) -> list[tuple[str, str, int]]:
-        """Batched serving lookups: ONE traversal shared by the whole
-        batch, so each visited trie edge advances every active query's
-        DP row in a single vectorized op — node visits amortize across
-        the batch exactly as in the distributed strategies. Returns
-        (query, word, distance) tuples (unordered)."""
+        """Batched serving lookups: ONE ``_traverse`` shared by the
+        whole batch, so each visited trie edge advances every active
+        query's 2k+1-cell DP window in a single vectorized op — node
+        visits amortize across the batch exactly as in the distributed
+        strategies, at any batch size. Returns (query, word, distance)
+        tuples (unordered)."""
         batch = QueryBatch(list(queries))
-        q, w, d = _traverse_auto(batch, int(max_distance), self)
+        q, w, d = _traverse(batch, int(max_distance), self)
         return list(zip(q, w, d))
 
 

@@ -65,7 +65,7 @@ def test_nul_and_control_chars_in_words(spark):
     """The end-cap sentinel must not collide with words containing NUL
     (regression: a '\\x00' string sentinel corrupted the trie)."""
     words = ["a", "a\x00b", "a\x00c", "ab"]
-    for builder in ["memory", "streaming"]:
+    for builder in ["auto", "streaming"]:
         pt = create(_words_df(spark, words), "word", num_partitions=2, builder=builder)
         assert sorted(r.node for r in pt.where("is_word").collect()) == sorted(words)
 
@@ -92,7 +92,7 @@ def test_build_single_shuffle_plan(spark):
     assert plan.count("Exchange") == 1
 
 
-@pytest.mark.parametrize("builder", ["memory", "streaming"])
+@pytest.mark.parametrize("builder", ["auto", "streaming"])
 def test_keep_duplicates_multiplicity(spark, builder):
     """keep_duplicates=True: end-caps carry the word's input
     multiplicity (the compressed form of the reference's n identical

@@ -97,22 +97,19 @@ def test_extend_rows_multi_matches_per_label():
 
 
 def test_banded_traverse_equals_full_randomized():
-    """The Ukkonen-banded kernel must return EXACTLY the full kernel's
-    result set — every (query, word, distance) triple — across random
-    vocabularies, query sets, and k values, including k=0 and k larger
-    than the longest string (where the window degenerates)."""
+    """The batch kernel (Ukkonen-banded windows) must return EXACTLY
+    the brute-force result set — every (query, word, distance) triple —
+    across random vocabularies, query sets, and k values, including k=0
+    and k larger than the longest string (where the window
+    degenerates)."""
     import random
 
     import pandas as pd
 
-    from prefixtree_spark.functions.levenshtein import QueryBatch
-    from prefixtree_spark.operators.incremental import _emit, _insert, _node
+    from prefixtree_spark.functions.levenshtein import QueryBatch, levenshtein
+    from prefixtree_spark.operators.build import _emit, _insert, _new_node
     from prefixtree_spark.plans.tree import PT_COLUMNS
-    from prefixtree_spark.operators.query import (
-        LocalIndex,
-        _traverse,
-        _traverse_banded,
-    )
+    from prefixtree_spark.operators.query import LocalIndex, _traverse
 
     rng = random.Random(42)
     alpha = "ABCD"
@@ -129,26 +126,21 @@ def test_banded_traverse_equals_full_randomized():
             for _ in range(rng.randint(1, 25))
         ]
         queries = [q for q in queries if q] or ["A"]
-        root = _node("")
+        root = _new_node("")
         for w in words:
             _insert(root, w)
         pdf = pd.DataFrame(list(_emit(root, 0, 1)), columns=PT_COLUMNS)
         idx = LocalIndex(pdf, merge=False)
         k = rng.choice([0, 1, 2, 3, 20])
         batch = QueryBatch(queries)
-        full = set(zip(*_traverse(batch, k, idx)))
-        banded = set(zip(*_traverse_banded(batch, k, idx)))
-        assert banded == full, (trial, k, words[:5], queries[:5])
-        # and both equal brute force
-        from prefixtree_spark.functions.levenshtein import levenshtein
-
+        banded = set(zip(*_traverse(batch, k, idx)))
         brute = {
             (q, w, levenshtein(q, w))
             for q in set(queries)
             for w in words
             if levenshtein(q, w) <= k
         }
-        assert full == brute, (trial, k)
+        assert banded == brute, (trial, k, words[:5], queries[:5])
 
 
 def test_banded_state_kernel_equals_row_kernel():

@@ -82,11 +82,31 @@ def test_scalar_walk_equals_batch_kernel_and_brute_force(seed, alphabet):
 
 
 def test_scalar_walk_on_empty_index():
-    idx = LocalIndex(pd.DataFrame(columns=PT_COLUMNS), merge=False)
-    for q in ("", "a", "abc"):
-        for k in range(4):
-            assert idx.search(q, k) == []
-            assert query_one(idx, q, k, metric="damerau") == []
+    for merge in (False, True):
+        idx = LocalIndex(pd.DataFrame(columns=PT_COLUMNS), merge=merge)
+        for q in ("", "a", "abc"):
+            for k in range(4):
+                assert idx.search(q, k) == []
+                assert query_one(idx, q, k, metric="damerau") == []
+        assert idx.search_many(["", "a", "abc"], 2) == []
+
+
+def test_search_many_large_batch_equals_brute_force():
+    """One batch of more than 1,100 queries through ``search_many``
+    (the batch kernel at sizes a 1,024-query cut once split between
+    two kernels), over an astral-codepoint vocabulary, k=0..3."""
+    alphabet = "aé中𝄞"
+    words = _vocabulary(5, alphabet)
+    rng = random.Random(5)
+    qs = {"", alphabet[0] * (max(map(len, words)) + 5)}
+    while len(qs) < 1_100:
+        qs.update(_queries(rng.randrange(1 << 30), alphabet, words))
+    qs = sorted(qs)
+    dist = {(q, w): brute_levenshtein(q, w) for q in qs for w in words}
+    idx = _index(words)
+    for k in range(4):
+        want = {(q, w, d) for (q, w), d in dist.items() if d <= k}
+        assert set(idx.search_many(qs, k)) == want, k
 
 
 @pytest.mark.parametrize("seed", range(3))

@@ -9,9 +9,9 @@ import pytest
 
 from prefixtree_spark import create, query
 from prefixtree_spark.functions.levenshtein import QueryBatch
-from prefixtree_spark.operators.build import _emit_rows, _insert, _new_node
-from prefixtree_spark.operators.query import _traverse_pdf
-from prefixtree_spark.plans.tree import PT_COLUMNS
+from prefixtree_spark.operators.build import _emit, _insert, _new_node
+from prefixtree_spark.operators.query import LocalIndex, _traverse_index
+from prefixtree_spark.plans.tree import ID_BLOCK, PT_COLUMNS
 from tests.conftest import brute_levenshtein
 
 
@@ -23,7 +23,7 @@ def _build_local(words_by_part):
         root = _new_node("")
         for w in ws:
             _insert(root, w)
-        rows.extend(_emit_rows(root, pid))
+        rows.extend(_emit(root, pid, pid * ID_BLOCK + 1))
     return pd.DataFrame(rows, columns=PT_COLUMNS)
 
 
@@ -44,7 +44,9 @@ def test_local_engine_vs_brute(seed):
         "".join(rng.choices(alpha, k=rng.randint(0, 12))) for _ in range(25)
     ] + rng.sample(words, min(5, len(words)))
     k = rng.choice([1, 2, 3])
-    res = _traverse_pdf(pt, QueryBatch(list(set(queries))), k)
+    res = _traverse_index(
+        LocalIndex(pt, merge=False), QueryBatch(list(set(queries))), k
+    )
     got = set(zip(res.query_string, res.node, res.final_distance))
     exp = {
         (q, w, brute_levenshtein(q, w))

@@ -176,6 +176,20 @@ def test_query_one_cache_sees_in_place_table_rewrite(spark):
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
 
 
+def test_build_local_index_on_empty_tree(spark):
+    """An empty dictionary serves as an empty index: the driver-side
+    forest merge must not crash on a tree with no nodes."""
+    from prefixtree_spark import build_local_index
+
+    pt = create(_words_df(spark, ["", "  "]), "word", num_partitions=2)
+    assert pt.count() == 0
+    idx = build_local_index(pt)
+    for q in ("", "A", "SMITH"):
+        assert query_one(idx, q, 2) == []
+        assert query_one(idx, q, 1, metric="damerau") == []
+    assert idx.search_many(["A", "SMITH"], 2) == []
+
+
 def test_search_many_matches_per_call(spark, sparse_pt):
     """Batched serving == union of per-call lookups."""
     idx = LocalIndex.from_dataframe(sparse_pt)

@@ -48,19 +48,19 @@ def test_streaming_builder_pure_python_equivalence():
         for w in words:
             stream.extend([w] * rng.randint(1, 2))
         got = list(_stream_build_sorted(iter(stream), 0))
-        from prefixtree_spark.operators.build import _emit_rows, _insert, _new_node
+        from prefixtree_spark.operators.build import _emit, _insert, _new_node
 
         root = _new_node("")
         for w in words:
             _insert(root, w)
-        exp = list(_emit_rows(root, 0))
+        exp = list(_emit(root, 0, 1))
         assert _canonical(got) == _canonical(exp), f"trial {trial}"
 
 
 @pytest.mark.parametrize("parts", [1, 4])
 def test_streaming_builder_spark_tree_equivalence(spark, parts):
     df = _words_df(spark, SPARSE_WORDS + ["CAT", "CAT", "  CAR  "])
-    mem = create(df, "word", num_partitions=parts, builder="memory")
+    mem = create(df, "word", num_partitions=parts)
     stream = create(df, "word", num_partitions=parts, builder="streaming")
     assert _canonical(_rows(mem)) == _canonical(_rows(stream))
 
@@ -123,16 +123,14 @@ def test_trie_sorted_words_is_sorted_unique(monkeypatch):
 def test_auto_builder_spill_equivalence(monkeypatch, keep_duplicates):
     """Force the spill path with a tiny budget across several input
     batches (trie-run + buffered runs + in-memory tail) — the emitted
-    tree must be canonically identical to the memory builder's, with
-    duplicate multiplicities preserved in keep_duplicates mode."""
+    tree must be canonically identical to the in-memory build's (the
+    default budget), with duplicate multiplicities preserved in
+    keep_duplicates mode."""
     import random
 
     import pandas as pd
 
-    from prefixtree_spark.operators.build import (
-        _build_partition,
-        _build_partition_auto,
-    )
+    from prefixtree_spark.operators.build import _build_partition_auto
 
     _fake_ctx(monkeypatch)
     rng = random.Random(11)
@@ -147,7 +145,9 @@ def test_auto_builder_spill_equivalence(monkeypatch, keep_duplicates):
     def rows(frames):
         return [tuple(r) for df in frames for r in df.itertuples(index=False)]
 
-    exp = rows(_build_partition(iter(batches), keep_duplicates=keep_duplicates))
+    exp = rows(
+        _build_partition_auto(iter(batches), keep_duplicates=keep_duplicates)
+    )
     got = rows(
         _build_partition_auto(
             iter(batches), keep_duplicates=keep_duplicates, budget_bytes=2_000
@@ -156,7 +156,7 @@ def test_auto_builder_spill_equivalence(monkeypatch, keep_duplicates):
     assert _canonical_dup(got, keep_duplicates) == _canonical_dup(exp, keep_duplicates)
     # sanity: the tiny budget really forced the spill (ids from the
     # streaming builder interleave open/close order, so the first
-    # emitted row differs from the memory builder's pre-order root)
+    # emitted row differs from the in-memory trie's pre-order root)
     assert got != exp
 
 
@@ -173,14 +173,17 @@ def _canonical_dup(rows, keep_duplicates):
 
 
 def test_auto_builder_under_budget_identical_to_memory(monkeypatch):
-    """Under the budget, auto IS the memory builder — bit-identical
-    rows, same ids."""
+    """Under the budget, auto IS the in-memory radix trie — bit-identical
+    rows, same ids (the partition's id block starts at pid*1e14 + 1)."""
     import pandas as pd
 
     from prefixtree_spark.operators.build import (
-        _build_partition,
         _build_partition_auto,
+        _emit,
+        _insert,
+        _new_node,
     )
+    from prefixtree_spark.plans.tree import ID_BLOCK
 
     _fake_ctx(monkeypatch, pid=3)
     batches = [pd.DataFrame({"word": SPARSE_WORDS})]
@@ -188,17 +191,19 @@ def test_auto_builder_under_budget_identical_to_memory(monkeypatch):
     def rows(frames):
         return [tuple(r) for df in frames for r in df.itertuples(index=False)]
 
-    assert rows(_build_partition_auto(iter(batches))) == rows(
-        _build_partition(iter(batches))
-    )
+    root = _new_node("")
+    for w in dict.fromkeys(SPARSE_WORDS):
+        _insert(root, w)
+    exp = list(_emit(root, 3, 3 * ID_BLOCK + 1))
+    assert rows(_build_partition_auto(iter(batches))) == exp
 
 
 def test_auto_builder_spark_end_to_end(spark):
     """builder='auto' with a spill-forcing budget through the real
-    mapInPandas path: canonical tree equals the memory builder's and
-    queries answer identically."""
+    mapInPandas path: canonical tree equals the default (under-budget,
+    in-memory) build's and queries answer identically."""
     df = _words_df(spark, SPARSE_WORDS + ["CAT", "CAT", "  CAR  "])
-    mem = create(df, "word", num_partitions=2, builder="memory")
+    mem = create(df, "word", num_partitions=2)
     auto = create(
         df, "word", num_partitions=2, builder="auto", builder_budget_bytes=100
     )
