@@ -188,7 +188,7 @@ def main() -> None:
     bench(
         "fuzzy_tree_distributed_k1",
         lambda: query(
-            pt_holder["pt"], qdf, "q", 1, mode="broadcast_queries", colocated=True
+            pt_holder["pt"], qdf, "q", 1, mode="broadcast_queries"
         ).count(),
         repeats=5,
     )
@@ -206,7 +206,7 @@ def main() -> None:
     bench(
         "fuzzy_tree_distributed_k2",
         lambda: query(
-            pt_holder["pt"], qdf, "q", 2, mode="broadcast_queries", colocated=True
+            pt_holder["pt"], qdf, "q", 2, mode="broadcast_queries"
         ).count(),
     )
     bench(
@@ -282,8 +282,7 @@ def main() -> None:
         bench(
             f"fuzzy_skew_query_{tag}",
             lambda tag=tag: query(
-                skew_pt[tag], skew_q, "q", 1,
-                mode="broadcast_queries", colocated=True,
+                skew_pt[tag], skew_q, "q", 1, mode="broadcast_queries"
             ).count(),
             extra=True,
         )
@@ -517,7 +516,7 @@ def main() -> None:
     rss0 = _rss_mb()
     t0 = time.time()
     n_fg = _qmod._query_filegroups(
-        pt_big, q10.distinct(), 2, colocated=True, chunk_size=25_000
+        pt_big, q10.distinct(), 2, chunk_size=25_000
     ).count()
     extras["filegroups_10x_sec"] = round(time.time() - t0, 3)
     extras["filegroups_10x_rows"] = n_fg
@@ -539,9 +538,7 @@ def main() -> None:
     qs_sp = [r[0] for r in q_big.distinct().collect()]
     for tag in ("cold", "warm"):
         t0 = time.time()
-        n_sp = _qmod._query_broadcast_queries(
-            pt_sp, qs_sp, 2, colocated=True
-        ).count()
+        n_sp = _qmod._query_broadcast_queries(pt_sp, qs_sp, 2).count()
         extras[f"scaleprobe_traversal_{tag}_sec"] = round(time.time() - t0, 3)
     extras["scaleprobe_traversal_rows"] = n_sp
     pt_sp.unpersist()
@@ -589,7 +586,7 @@ def main() -> None:
         pt_pre.count()
         extras["giant_forest_reshard_once_sec"] = round(time.time() - t0, 3)
         t0 = time.time()
-        n2 = query(pt_pre, q_big, "q", 2, mode="auto", colocated=True).count()
+        n2 = query(pt_pre, q_big, "q", 2, mode="auto").count()
         extras["giant_forest_presharded_second_sec"] = round(
             time.time() - t0, 3
         )

@@ -44,6 +44,7 @@ from prefixtree_spark.plans.tree import (
     PT_COLUMNS_DUP,
     PT_SCHEMA,
     PT_SCHEMA_DUP,
+    mark_colocated,
     n_forests_hint,
     set_n_forests_hint,
 )
@@ -539,29 +540,26 @@ def create(
     schema = PT_SCHEMA_DUP if keep_duplicates else PT_SCHEMA
     if builder == "streaming":
         words = words.sortWithinPartitions("word")
-        return set_n_forests_hint(
-            words.mapInPandas(
-                lambda it: _build_partition_streaming(
-                    it, keep_duplicates=keep_duplicates
-                ),
-                schema=schema,
-            ),
-            n,
-        )
-    if builder != "auto":
-        raise ValueError(f"unknown builder {builder!r}")
-    # the build KNOWS its forest count (the repartition N) — hint it so
-    # the delta paths (add_words/remove_words plan gates + routing)
-    # skip their per-call max(compute_node) probe job
-    budget = builder_budget_bytes
-    return set_n_forests_hint(
-        words.mapInPandas(
-            lambda it: _build_partition_auto(
+
+        def build(it):
+            return _build_partition_streaming(it, keep_duplicates=keep_duplicates)
+
+    elif builder == "auto":
+        budget = builder_budget_bytes
+
+        def build(it):
+            return _build_partition_auto(
                 it, keep_duplicates=keep_duplicates, budget_bytes=budget
-            ),
-            schema=schema,
-        ),
-        n,
+            )
+
+    else:
+        raise ValueError(f"unknown builder {builder!r}")
+    # each build task emits whole forests, so the output is colocated by
+    # construction; and the build KNOWS its forest count (the
+    # repartition N), so the delta paths (add_words/remove_words plan
+    # gates + routing) skip their per-call max(compute_node) probe job
+    return mark_colocated(
+        set_n_forests_hint(words.mapInPandas(build, schema=schema), n)
     )
 
 
@@ -624,9 +622,13 @@ def _read_index_meta(spark: SparkSession, path: str) -> int | None:
 
 def _colocate_forests(pt: DataFrame) -> DataFrame:
     """Reshuffle a node table so each partition holds whole forests,
-    spread evenly — the one colocation every traversal relies on
-    (``load_index``/``load_published_index`` with ``colocated=True``,
-    the query chunk loop, and the one-shot distributed-tree route).
+    spread evenly — the one colocation every traversal relies on. Its
+    output carries the colocation record (``plans.tree.mark_colocated``),
+    as ``create``'s does, so the traversals (``query``'s distributed
+    routes, ``query_groups``, ``prefix_search``) walk it in place; they
+    call this helper themselves for any frame without the record, and
+    ``load_index``/``load_published_index(colocated=True)`` call it at
+    load time.
 
     RANGE partitioning on compute_node at an EXPLICIT 2x-parallelism
     count, never hash at 1x: the number of forests is ~the build
@@ -651,15 +653,17 @@ def _colocate_forests(pt: DataFrame) -> DataFrame:
         pt.rdd.getNumPartitions(),
         pt.sparkSession.sparkContext.defaultParallelism,
     )
-    return pt.repartitionByRange(n_part, "compute_node")
+    return mark_colocated(pt.repartitionByRange(n_part, "compute_node"))
 
 
 def load_index(spark: SparkSession, path: str, *, colocated: bool = False) -> DataFrame:
-    """Read a saved node table. ``colocated=True`` restores
-    forest-per-partition colocation with one repartition so subsequent
-    ``query(..., colocated=True)`` calls can traverse shuffle-free
-    (the parquet reader may otherwise split a forest across input
-    partitions at row-group boundaries)."""
+    """Read a saved node table. ``colocated=True`` performs the
+    forest-per-partition colocation at load time (one range
+    repartition, ``_colocate_forests``; the parquet reader may split a
+    forest across input partitions at row-group boundaries), so every
+    later traversal of the returned frame, or of its ``persist()``,
+    runs in place. Without it, each traversal call colocates the frame
+    itself."""
     df = spark.read.parquet(path)
     if colocated:
         df = _colocate_forests(df)
@@ -687,7 +691,7 @@ def load_published_index(
     spark: SparkSession, root: str, *, colocated: bool = False
 ) -> DataFrame:
     """Read the LIVE version of a ``publish_index`` table; see
-    ``load_index`` for the ``colocated`` contract."""
+    ``load_index`` for what ``colocated=True`` does."""
     from prefixtree_spark.sources.io import read_published
 
     df = read_published(spark, root)
@@ -720,13 +724,13 @@ def index_is_bucketed(df: DataFrame, col: str = "parent_id") -> bool:
     BUILDINDEX layout, PrefixTree.ecl:612-613) — possibly under
     projections/filters, which preserve the scan's partitioning.
 
-    Used by ``query`` to honor the reference's build-once/query-keyed
-    contract without the caller passing ``tree_partitioned=True``:
-    detection walks the analyzed plan to the scan and reads the
-    catalog bucket spec. Conservative: any doubt (several scan leaves,
-    no catalog table, introspection failure on a non-classic backend)
-    returns False, which only costs the one upfront repartition the
-    caller would otherwise skip."""
+    Used by ``query``'s ``bfs`` mode to honor the reference's
+    build-once/query-keyed contract with no caller flag: detection
+    walks the analyzed plan to the scan and reads the catalog bucket
+    spec. Conservative: any doubt (several scan leaves, no catalog
+    table, introspection failure on a non-classic backend) returns
+    False, which only costs the one upfront repartition a bucketed
+    layout would skip (Spark re-plans the join either way)."""
     try:
         # a bucket spec only yields the pre-shuffled scan when bucketed
         # reads are actually enabled in the session — otherwise the

@@ -8,13 +8,15 @@ home game. Semantics: for each query prefix p, return every dictionary
 word starting with p (codepoint-wise, case-sensitive — DuckDB
 ``starts_with`` is the oracle).
 
-Physical plan (mirrors ``query``'s distributed strategy): the prefix
-batch is broadcast; each build partition traverses its own forest in
-place (``mapInPandas`` over the colocated tree, or one
-``groupBy(compute_node)`` shuffle to restore colocation) — the
-dictionary side never moves. Pruning: an edge label that diverges from
-the prefix kills its whole subtree; once the prefix is consumed the
-remaining subtree is emitted without further comparisons.
+Physical plan (``query``'s distributed strategy): the prefix batch is
+broadcast and one ``mapInPandas`` walks each partition's whole forests
+in place. A tree with the engine's colocation record (fresh from
+``create`` or ``load_index(colocated=True)``) never moves; any other
+frame is colocated once by the same range repartition ``query`` uses
+(``_one_shot_tree``), and that result is pinned before the tree's pin
+is released. Pruning: an edge label that diverges from the prefix
+kills its whole subtree; once the prefix is consumed the remaining
+subtree is emitted without further comparisons.
 """
 
 from __future__ import annotations
@@ -84,18 +86,13 @@ def _prefix_hits(idx, p: str) -> list[str]:
     return out
 
 
-def prefix_search(
-    pt: DataFrame,
-    prefixes: DataFrame,
-    col: str,
-    *,
-    colocated: bool = False,
-) -> DataFrame:
+def prefix_search(pt: DataFrame, prefixes: DataFrame, col: str) -> DataFrame:
     """DataFrame[prefix, word]: every (query prefix, dictionary word)
     pair where the word starts with the prefix. Distinct prefixes, like
-    ``query``'s distinct-query semantics. The tree side never shuffles
-    when ``colocated=True`` (fresh from ``create`` / ``load_index``)."""
-    from prefixtree_spark.operators.query import LocalIndex
+    ``query``'s distinct-query semantics. A tree fresh from ``create``
+    never shuffles and the result stays lazy; any other frame is
+    range-colocated and the result comes back pinned."""
+    from prefixtree_spark.operators.query import LocalIndex, _one_shot_tree
 
     spark = pt.sparkSession
     pdf = (
@@ -106,7 +103,11 @@ def prefix_search(
     plist = [r[0] for r in pdf.collect()]
     bp = spark.sparkContext.broadcast(plist)
 
-    def run_pdf(forest: pd.DataFrame) -> pd.DataFrame:
+    def run_partition(batches):
+        frames = [x for x in batches if len(x)]
+        if not frames:
+            return
+        forest = pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
         idx = LocalIndex(forest, merge=False)
         ps: list[str] = []
         ws: list[str] = []
@@ -114,23 +115,11 @@ def prefix_search(
             hits = _prefix_hits(idx, p)
             ps.extend([p] * len(hits))
             ws.extend(hits)
-        return pd.DataFrame({"prefix": ps, "word": ws})
+        yield pd.DataFrame({"prefix": ps, "word": ws})
 
-    if colocated:
-
-        def run_partition(batches):
-            frames = [x for x in batches if len(x)]
-            if not frames:
-                return
-            forest = pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
-            yield run_pdf(forest)
-
-        return pt.mapInPandas(run_partition, schema=PREFIX_RESULT_SCHEMA)
-
-    def run(forest: pd.DataFrame) -> pd.DataFrame:
-        return run_pdf(forest)
-
-    return pt.groupBy("compute_node").applyInPandas(run, schema=PREFIX_RESULT_SCHEMA)
+    with _one_shot_tree(pt) as tree:
+        out = tree.mapInPandas(run_partition, schema=PREFIX_RESULT_SCHEMA)
+        return out if tree is pt else out.localCheckpoint(eager=True)
 
 
 def search_prefix(index, p: str) -> list[str]:

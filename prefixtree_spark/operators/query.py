@@ -30,12 +30,14 @@ side may be the big one:
     once with ALL queries advancing together through ``_traverse``,
     the one batch kernel (a 2k+1-cell Ukkonen window per query,
     functions/levenshtein.py). Shuffle-free on the big side when the
-    caller promises ``colocated=True``; otherwise ONE range repartition
-    on ``compute_node`` at 2x parallelism (``_colocate_forests``, the
-    only way forests are ever colocated) gives each forest its own
-    task. The inverted-index-style scale path for huge dictionaries,
-    and the ONE per-partition traversal every distributed route below
-    shares.
+    tree carries the engine's colocation record (``create`` output, or
+    ``load_index(colocated=True)``, and their ``persist()``); any other
+    frame gets ONE range repartition on ``compute_node`` at 2x
+    parallelism (``_colocate_forests``, the only way forests are ever
+    colocated), which gives each forest its own task. No caller flag
+    promises the layout. The inverted-index-style scale path for huge
+    dictionaries, and the ONE per-partition traversal every distributed
+    route below shares.
   - ``mode="broadcast_tree"``: the node table is collected+broadcast and
     queries stream through ``mapInPandas`` — the scale path for huge
     query sets over dictionaries that fit in executor memory.
@@ -86,7 +88,7 @@ from prefixtree_spark.functions.levenshtein import (
 )
 from prefixtree_spark.operators.build import _colocate_forests
 from prefixtree_spark.plans.lifecycle import release_checkpoint
-from prefixtree_spark.plans.tree import VIRTUAL_ROOT_ID
+from prefixtree_spark.plans.tree import VIRTUAL_ROOT_ID, is_colocated
 
 def merge_forests(pt_pdf: pd.DataFrame) -> pd.DataFrame:
     """Rebuild a collected multi-partition forest into ONE local radix
@@ -115,6 +117,15 @@ RESULT_SCHEMA = T.StructType(
         T.StructField("final_distance", T.IntegerType(), False),
     ]
 )
+
+def _distance(max_distance) -> int:
+    """``max_distance`` as the int every kernel takes; a negative value
+    fails here, before any Spark job or kernel call."""
+    k = int(max_distance)
+    if k < 0:
+        raise ValueError(f"max_distance must be >= 0, got {max_distance!r}")
+    return k
+
 
 # Collected trees up to this many nodes use the broadcast_tree path in
 # mode="auto"; beyond it the tree stays distributed.
@@ -405,18 +416,17 @@ def _union_all(frames: list[DataFrame]) -> DataFrame:
 
 
 @contextmanager
-def _colocated_tree(pt: DataFrame, colocated: bool, release):
+def _colocated_tree(pt: DataFrame, release):
     """Yield ``pt`` with every partition holding whole forests, for all
-    chunks of one loop. ``colocated=True`` promises that already holds
-    (a tree fresh from ``create``/``load_index``) and yields ``pt``
-    untouched. Otherwise ``_colocate_forests`` runs ONCE, pinned and
-    counted before the first chunk, and that pin — the only one this
-    helper ever unpersists — is released on exit. ``release`` runs
-    right after the count: auto passes its own pin on ``pt`` there, so
-    two full cached trees overlap for one repartition pass, never for
-    the whole loop (a caller's own cache is never passed, so it stays);
-    the chunk loop passes None."""
-    if colocated:
+    chunks of one loop. A tree with the colocation record (fresh from
+    ``create``/``_colocate_forests``) is yielded untouched. Otherwise
+    ``_colocate_forests`` runs ONCE, pinned and counted before the first
+    chunk, and that pin — the only one this helper ever unpersists — is
+    released on exit. ``release`` runs right after the count: auto
+    passes its own pin on ``pt`` there, so two full cached trees overlap
+    for one repartition pass, never for the whole loop (a caller's own
+    cache is never passed, so it stays); the chunk loop passes None."""
+    if is_colocated(pt):
         yield pt
         return
     pinned = _colocate_forests(pt).persist()
@@ -427,6 +437,26 @@ def _colocated_tree(pt: DataFrame, colocated: bool, release):
         yield pinned
     finally:
         pinned.unpersist()
+
+
+@contextmanager
+def _one_shot_tree(pt: DataFrame):
+    """Yield ``pt`` with every partition holding whole forests, for ONE
+    job whose result the caller pins inside the block. A tree with the
+    colocation record is yielded untouched. Otherwise the tree is
+    range-colocated (``_colocate_forests``); its sampling job reads
+    ``pt`` before the shuffle does, so an unpinned tree is pinned for
+    the block (``_own_persist``: auto's pin or a caller's cache is
+    reused, and only a pin taken here is released)."""
+    if is_colocated(pt):
+        yield pt
+        return
+    pt, owned = _own_persist(pt)
+    try:
+        yield _colocate_forests(pt)
+    finally:
+        if owned:
+            pt.unpersist()
 
 
 class _QueryPayload:
@@ -490,7 +520,7 @@ def _traverse_forests(pt: DataFrame, source, k: int) -> DataFrame:
 
 
 def _query_broadcast_queries(
-    pt: DataFrame, query_strings: list[str], k: int, *, colocated: bool = False
+    pt: DataFrame, query_strings: list[str], k: int
 ) -> DataFrame:
     """One-shot distributed-tree route: the whole (collected) query
     batch rides ONE broadcast to every forest; the result is pinned
@@ -499,35 +529,25 @@ def _query_broadcast_queries(
     and its memoized QueryBatch until ContextCleaner GC happens to
     run).
 
-    ``colocated=True`` promises every node row sits in the same Spark
-    partition as its whole forest (true for a DataFrame fresh out of
-    ``create`` and for ``load_index`` output) — then the traversal runs
-    in place with ZERO shuffle of the dictionary side. Otherwise
-    ``_colocate_forests`` restores colocation first — range at 2x
-    parallelism, so each forest gets its own task (hash at 1x put 3 of
-    4 forests in one task; SCALING.md "One-shot distributed-tree route:
-    range colocation too") — NOT groupBy().applyInPandas:
-    AQE coalesces the group exchange's small byte size to ~1 partition
-    and applyInPandas then runs one QueryBatch build + DP PER GROUP
-    sequentially inside it (measured: 14.5 s vs 1.4 s colocated at 14k
-    queries × 32 forests). The range sampling job reads ``pt`` before
-    the shuffle does, so an unpinned tree is pinned for the call
-    (``_own_persist``: auto's pin or a caller's cache is reused, and
-    only a pin taken here is released)."""
-    pt, owned = (pt, False) if colocated else _own_persist(pt)
+    A tree with the colocation record (fresh from ``create``, or
+    ``load_index(colocated=True)``) is traversed in place with ZERO
+    shuffle of the dictionary side. Any other frame is colocated first
+    by ``_one_shot_tree`` — range at 2x parallelism, so each forest
+    gets its own task (hash at 1x put 3 of 4 forests in one task;
+    SCALING.md "One-shot distributed-tree route: range colocation too")
+    — NOT groupBy().applyInPandas: AQE coalesces the group exchange's
+    small byte size to ~1 partition and applyInPandas then runs one
+    QueryBatch build + DP PER GROUP sequentially inside it (measured:
+    14.5 s vs 1.4 s colocated at 14k queries × 32 forests)."""
     bq = pt.sparkSession.sparkContext.broadcast(_QueryPayload(query_strings))
     try:
-        tree = pt if colocated else _colocate_forests(pt)
-        return _traverse_forests(tree, bq, k).localCheckpoint(eager=True)
+        with _one_shot_tree(pt) as tree:
+            return _traverse_forests(tree, bq, k).localCheckpoint(eager=True)
     finally:
         bq.destroy()
-        if owned:
-            pt.unpersist()
 
 
-def _chunk_loop(
-    pt: DataFrame, chunks, k: int, *, colocated: bool, in_flight: int
-) -> DataFrame:
+def _chunk_loop(pt: DataFrame, chunks, k: int, *, in_flight: int) -> DataFrame:
     """The both-sides-big loop: one ``_traverse_forests`` job per query
     chunk over a tree colocated once (``_colocated_tree``), each result
     pinned eagerly, all unioned by ``_union_all``. A chunk is a list of
@@ -547,7 +567,7 @@ def _chunk_loop(
     unioned in chunk order either way; each job pins its own result,
     so concurrency changes wall-clock, never rows."""
     spark = pt.sparkSession
-    with _colocated_tree(pt, colocated, None) as tree:
+    with _colocated_tree(pt, None) as tree:
 
         def run(chunk) -> DataFrame:
             source = (
@@ -570,9 +590,7 @@ def _chunk_loop(
     return _union_all(pinned)
 
 
-def _query_funnel(
-    pt: DataFrame, qdf: DataFrame, k: int, *, colocated: bool = False
-) -> DataFrame:
+def _query_funnel(pt: DataFrame, qdf: DataFrame, k: int) -> DataFrame:
     """Both-sides-big strategy through the driver: stream the query side
     with ``toLocalIterator`` in chunks of ``_AUTO_BROADCAST_QUERIES``
     strings through the serial chunk loop.
@@ -610,16 +628,11 @@ def _query_funnel(
         if buf:
             yield buf
 
-    return _chunk_loop(pt, chunks(), k, colocated=colocated, in_flight=1)
+    return _chunk_loop(pt, chunks(), k, in_flight=1)
 
 
 def _query_filegroups(
-    pt: DataFrame,
-    qdf: DataFrame,
-    k: int,
-    *,
-    colocated: bool = False,
-    chunk_size: int | None = None,
+    pt: DataFrame, qdf: DataFrame, k: int, *, chunk_size: int | None = None
 ) -> DataFrame:
     """Both-sides-big strategy without the driver funnel (r12 verdict
     #5): executors write the query side to parquet FILE GROUPS
@@ -645,7 +658,7 @@ def _query_filegroups(
     out_dir = os.path.join(root, "query_groups")
     try:
         write_query_groups(qdf, qdf.columns[0], out_dir, chunk_size=chunk_size)
-        return query_groups(pt, out_dir, k, colocated=colocated)
+        return query_groups(pt, out_dir, k)
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -678,9 +691,7 @@ def write_query_groups(
     return len(_list_query_groups(path))
 
 
-def query_groups(
-    pt: DataFrame, path: str, max_distance: int, *, colocated: bool = False
-) -> DataFrame:
+def query_groups(pt: DataFrame, path: str, max_distance: int) -> DataFrame:
     """Batch fuzzy search over a query side pre-written by
     ``write_query_groups`` — the both-sides-big strategy with the
     driver off the data path, as a reusable public step. The chunk loop
@@ -691,11 +702,12 @@ def query_groups(
     DataFrame[query_string, node, final_distance].
 
     ``path`` must be visible to every executor (shared storage on a
-    real cluster). ``colocated=True`` promises ``pt`` is fresh from
-    ``create``/``load_index`` — else the tree is colocated once here
-    for all groups."""
+    real cluster). A ``pt`` fresh from ``create`` (or
+    ``load_index(colocated=True)``) is traversed in place; any other
+    frame is colocated once here for all groups."""
     import os
 
+    k = _distance(max_distance)
     # refuse a partial write: a crashed/in-flight write_query_groups
     # leaves part files without the _SUCCESS marker, and serving those
     # would silently DROP every query in the unwritten groups — the
@@ -707,11 +719,7 @@ def query_groups(
             "before serving queries from this directory"
         )
     return _chunk_loop(
-        pt,
-        _list_query_groups(path),
-        int(max_distance),
-        colocated=colocated,
-        in_flight=_FILEGROUP_IN_FLIGHT,
+        pt, _list_query_groups(path), k, in_flight=_FILEGROUP_IN_FLIGHT
     )
 
 
@@ -777,14 +785,14 @@ def reshard(pt: DataFrame, *, num_partitions: int | None = None) -> DataFrame:
     tree pay the rebuild every time. Pre-shard once instead::
 
         pt2 = reshard(pt).persist()      # or save_index(reshard(pt))
-        query(pt2, batch1, "q", k, colocated=True)
-        query(pt2, batch2, "q", k, colocated=True)   # no rebuild
+        query(pt2, batch1, "q", k)
+        query(pt2, batch2, "q", k)       # no rebuild, no colocation
 
-    The result is a plain ``create`` output: colocated (safe for
-    ``colocated=True``), persistable, and ``save_index``-able like any
-    built tree. The word set is preserved verbatim (``trim="right"``
-    is identity on end-cap words; the length cap is lifted), so query
-    results are identical. ``n_copies`` multiplicity
+    The result is a plain ``create`` output: it carries the colocation
+    record (traversed in place), is persistable, and is
+    ``save_index``-able like any built tree. The word set is preserved
+    verbatim (``trim="right"`` is identity on end-cap words; the length
+    cap is lifted), so query results are identical. ``n_copies`` multiplicity
     (``keep_duplicates=True`` trees) is carried by re-expanding each
     end-cap to its input count before the rebuild."""
     from prefixtree_spark.operators.build import create
@@ -901,7 +909,7 @@ def _query_bfs(
     qcol: str,
     k: int,
     *,
-    tree_partitioned: bool = False,
+    tree_partitioned: bool,
 ) -> DataFrame:
     """Level-synchronous frontier join — the reference's physical plan
     (LOOP + keyed JOIN, PrefixTree.ecl:430-442) on DataFrames.
@@ -919,10 +927,11 @@ def _query_bfs(
         trees too big to broadcast are hash-partitioned on
         ``parent_id`` ONCE, so every level's equi-join reuses that
         layout and only the (shrinking) frontier shuffles — the
-        reference's keyed INDEX (PrefixTree.ecl:612-613). Pass
-        ``tree_partitioned=True`` when ``pt`` is already laid out on
-        parent_id (a bucketed table from ``save_index_bucketed``) to
-        skip both the probe and the upfront shuffle.
+        reference's keyed INDEX (PrefixTree.ecl:612-613).
+        ``tree_partitioned=True`` (``query`` passes
+        ``index_is_bucketed(pt)``: a bucketed table from
+        ``save_index_bucketed``) skips both the probe and the upfront
+        shuffle.
       - ONE eager materialization per level (the next frontier, which
         runs the join + DP exactly once); end-cap rows are kept as
         LAZY slices off each level's checkpointed frontier and only
@@ -1066,9 +1075,7 @@ def query(
     max_distance: int,
     *,
     mode: str = "auto",
-    colocated: bool = False,
     index: "LocalIndex | None" = None,
-    tree_partitioned: bool = False,
     bytes: bool = False,
 ) -> DataFrame:
     """Batch fuzzy search ≡ QueryThorLevenshtein (PrefixTree.ecl:314-446).
@@ -1084,19 +1091,20 @@ def query(
     analog, PrefixTree.ecl:459-588) — without it, each
     ``broadcast_tree`` call pays a fresh driver-side collect + merge.
 
-    ``colocated=True`` (safe for a tree fresh from ``create``) lets the
-    distributed-tree strategy traverse in place with zero shuffle of
-    the dictionary side. Otherwise that strategy first range-partitions
-    the tree on ``compute_node`` at 2x parallelism, so each forest gets
-    its own task; see ``_query_broadcast_queries``. That strategy's
-    result comes back pinned (an eager local checkpoint).
+    The engine knows its own layout; no flag promises it. A tree fresh
+    from ``create`` (or ``load_index(colocated=True)``), or its
+    ``persist()``/``cache()``, carries the colocation record, and the
+    distributed-tree strategy traverses it in place with zero shuffle
+    of the dictionary side. Any other frame (a filter, a repartition, a
+    plain ``load_index``) is first range-partitioned on
+    ``compute_node`` at 2x parallelism, so each forest gets its own
+    task; see ``_query_broadcast_queries``. That strategy's result
+    comes back pinned (an eager local checkpoint). ``bfs`` mode detects
+    a tree read from a table bucketed on ``parent_id``
+    (``save_index_bucketed``, via ``index_is_bucketed``) and skips its
+    upfront tree shuffle.
 
-    ``tree_partitioned=True`` tells ``bfs`` mode that ``pt`` is already
-    laid out on ``parent_id`` (e.g. via ``save_index_bucketed``), so it
-    skips its upfront tree shuffle. Tables read from a catalog table
-    bucketed on ``parent_id`` are DETECTED automatically
-    (``index_is_bucketed``) — the flag exists for layouts the detector
-    cannot see (e.g. a DataFrame you repartitioned yourself).
+    ``max_distance`` must be >= 0 (``ValueError`` before any job).
 
     ``bytes=True`` matches a tree built with ``create(..., bytes=True)``
     — edits count UTF-8 BYTES (the reference's ECL byte-string
@@ -1107,6 +1115,7 @@ def query(
     strings. The caller passes the SAME flag on both sides (same duty
     as ``trim``); mixing modes silently miscounts non-ASCII edits.
     """
+    k = _distance(max_distance)
     if bytes:
         from prefixtree_spark.functions.bytesurrogate import (
             from_byte_surrogate,
@@ -1114,16 +1123,12 @@ def query(
         )
 
         enc = queries.select(to_byte_surrogate(F.col(col)).alias(col))
-        out = query(
-            pt, enc, col, max_distance, mode=mode, colocated=colocated,
-            index=index, tree_partitioned=tree_partitioned,
-        )
+        out = query(pt, enc, col, k, mode=mode, index=index)
         return out.select(
             from_byte_surrogate("query_string").alias("query_string"),
             from_byte_surrogate("node").alias("node"),
             "final_distance",
         )
-    k = int(max_distance)
     # semantics: one result set per DISTINCT query string
     qdf = (
         queries.select(F.col(col).alias(col))
@@ -1132,16 +1137,13 @@ def query(
     )
     if index is not None:
         return _query_broadcast_tree(qdf, col, index, k)
-    if not tree_partitioned and mode in ("bfs", "auto"):
+    if mode == "bfs":
         # build-once/query-keyed: a tree loaded from a bucketed index
         # (save_index_bucketed ≡ BUILDINDEX, PrefixTree.ecl:612-613) is
         # already laid out on parent_id — skip bfs's upfront repartition
-        # without the caller knowing the flag
         from prefixtree_spark.operators.build import index_is_bucketed
 
-        tree_partitioned = index_is_bucketed(pt)
-    if mode == "bfs":
-        return _query_bfs(pt, qdf, col, k, tree_partitioned=tree_partitioned)
+        return _query_bfs(pt, qdf, col, k, tree_partitioned=index_is_bucketed(pt))
     if mode == "broadcast_tree":
         pt, owned = _own_persist(pt)
         try:
@@ -1150,9 +1152,7 @@ def query(
             if owned:
                 pt.unpersist()
     if mode == "broadcast_queries":
-        return _query_broadcast_queries(
-            pt, [r[0] for r in qdf.collect()], k, colocated=colocated
-        )
+        return _query_broadcast_queries(pt, [r[0] for r in qdf.collect()], k)
     if mode == "filegroups":
         # both-sides-big without the driver funnel: the query side is
         # hashed into parquet file groups executor-side and each
@@ -1162,7 +1162,7 @@ def query(
         # Opt-in: at the measured sf0.1 both-big shape the
         # toLocalIterator chunk loop is equal-or-faster (SCALING r13),
         # so auto keeps choosing it below _AUTO_FILEGROUP_QUERIES.
-        return _query_filegroups(pt, qdf, k, colocated=colocated)
+        return _query_filegroups(pt, qdf, k)
     if mode == "auto":
         # persist so the size probe and the chosen strategy share one
         # tree materialization (the build is the expensive part); every
@@ -1204,9 +1204,7 @@ def query(
                 if len(rows) <= _AUTO_BROADCAST_QUERIES:
                     # the route pins its result, so OUR pin on pt can
                     # go as soon as it returns
-                    return _query_broadcast_queries(
-                        pt, [r[0] for r in rows], k, colocated=colocated
-                    )
+                    return _query_broadcast_queries(pt, [r[0] for r in rows], k)
                 return _query_broadcast_tree(
                     qdf, col, _merged_local_index(pt, n_nodes), k
                 )
@@ -1221,7 +1219,7 @@ def query(
                 n_q = qdf.count()
                 if n_q <= _AUTO_BROADCAST_QUERIES:
                     return _query_broadcast_queries(
-                        pt, [r[0] for r in qdf.collect()], k, colocated=colocated
+                        pt, [r[0] for r in qdf.collect()], k
                     )
                 # big tree x big query set: chunk the query side through
                 # the distributed-tree traversal (round-4 verdict #2 — bfs
@@ -1244,9 +1242,9 @@ def query(
                     # exactly the regime defined by the tree being too
                     # big to collect. Caller-owned caches stay.
                     with _colocated_tree(
-                        pt, colocated, pt.unpersist if owned else None
+                        pt, pt.unpersist if owned else None
                     ) as tree:
-                        return run_chunked(tree, qdf, k, colocated=True)
+                        return run_chunked(tree, qdf, k)
                 # per-partition forests exceed a traversal task's
                 # budget: RE-SHARD instead of bfs (round-5 verdict #1 —
                 # bfs is the one plan measured to LOSE to brute force
@@ -1262,7 +1260,7 @@ def query(
                 try:
                     if owned:
                         pt.unpersist()
-                    return run_chunked(pt3, qdf, k, colocated=True)
+                    return run_chunked(pt3, qdf, k)
                 finally:
                     pt3.unpersist()
             finally:
@@ -1358,10 +1356,11 @@ class LocalIndex:
         one scalar walk (``_walk_one``), the reference's own per-query
         loop (PrefixTree.ecl:459-539). A batch of one gains nothing
         from the vectorized kernels and pays numpy dispatch per edge."""
+        k = _distance(max_distance)
         roots = self._walk
         if roots is None:
             roots = self._walk_roots()
-        return sorted(_walk_one(roots, s, int(max_distance)))
+        return sorted(_walk_one(roots, s, k))
 
     def _walk_roots(self) -> list:
         """Python-object view of the tree for ``_walk_one``: one
@@ -1404,8 +1403,8 @@ class LocalIndex:
         visits amortize across the batch exactly as in the distributed
         strategies, at any batch size. Returns (query, word, distance)
         tuples (unordered)."""
-        batch = QueryBatch(list(queries))
-        q, w, d = _traverse(batch, int(max_distance), self)
+        k = _distance(max_distance)
+        q, w, d = _traverse(QueryBatch(list(queries)), k, self)
         return list(zip(q, w, d))
 
 
@@ -1482,6 +1481,7 @@ def query_one(
         raise ValueError(
             f"metric must be 'levenshtein' or 'damerau', got {metric!r}"
         )
+    _distance(max_distance)
     if isinstance(index, DataFrame):
         index = _cached_local_index(index)
     if bytes:

@@ -62,9 +62,9 @@ def similarity_join(
     length — the relational contract is "all pairs", so the tree
     builder's reference-parity 255-char cap must not silently drop
     long values from one side (it is an opt-in here, not a default).
-    The traversal runs colocated: the tree is fresh from ``create`` and
-    already partitioned by its build layout, so the distributed query
-    path skips the tree-side shuffle (query.py's colocated contract)."""
+    The traversal runs in place: the tree is fresh from ``create``,
+    which records its whole-forest-per-partition layout, so the
+    distributed query path skips the tree-side shuffle."""
     if metric not in ("levenshtein", "damerau"):
         raise ValueError(
             f"metric must be 'levenshtein' or 'damerau', got {metric!r}"
@@ -79,8 +79,7 @@ def similarity_join(
         from prefixtree_spark.functions.damerau import dl_pairs_udf
 
         cand = query(
-            pt, queries.distinct(), "q", 2 * max_distance, mode=mode,
-            colocated=True, bytes=bytes,
+            pt, queries.distinct(), "q", 2 * max_distance, mode=mode, bytes=bytes
         )
         dl = dl_pairs_udf()
         # Three plan rules, each measured at sf0.1 (164k candidates):
@@ -122,8 +121,7 @@ def similarity_join(
         )
         return scored.where(F.col("distance") <= max_distance)
     matches = query(
-        pt, queries.distinct(), "q", max_distance, mode=mode, colocated=True,
-        bytes=bytes,
+        pt, queries.distinct(), "q", max_distance, mode=mode, bytes=bytes
     )
     return matches.select(
         F.col("query_string").alias("left_value"),

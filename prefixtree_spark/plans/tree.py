@@ -44,7 +44,7 @@ PT_SCHEMA_DUP = T.StructType(
 PT_COLUMNS_DUP = [f.name for f in PT_SCHEMA_DUP.fields]
 
 # ---------------------------------------------------------------------------
-# forest-count hint: the one piece of build metadata the delta paths need
+# forest-count hint: the build metadata the delta paths need
 # ---------------------------------------------------------------------------
 #
 # add_words/remove_words gate their sparse-vs-bulk plan on the forest
@@ -74,3 +74,36 @@ def n_forests_hint(df) -> int | None:
     """The attached forest count, or None (caller probes)."""
     n = getattr(df, _N_FORESTS_ATTR, None)
     return int(n) if n is not None else None
+
+
+# ---------------------------------------------------------------------------
+# colocation record: every partition holds whole forests
+# ---------------------------------------------------------------------------
+#
+# The distributed traversals walk each partition as a set of complete
+# forests; a forest split across partitions silently loses matches. The
+# engine knows when that layout holds, so callers never promise it. The
+# record rides on the same attribute channel as the forest count, but
+# unlike the count it decides correctness, so it has exactly two
+# producers, both colocated by construction: ``create`` (each build
+# task emits whole forests) and ``build._colocate_forests`` (one range
+# repartition on compute_node). ``persist``/``cache`` return the same
+# object and keep it; any transformation returns a new object without
+# it, and that frame is colocated once more by the consumer.
+
+_COLOCATED_ATTR = "_pt_colocated"
+
+
+def mark_colocated(df):
+    """Record that every partition of ``df`` holds whole forests
+    (returns ``df``). Only a producer that makes that layout calls it."""
+    try:
+        setattr(df, _COLOCATED_ATTR, True)
+    except Exception:
+        pass  # no __dict__: unrecorded frames are colocated by the consumer
+    return df
+
+
+def is_colocated(df) -> bool:
+    """Whether ``df`` carries the colocation record."""
+    return getattr(df, _COLOCATED_ATTR, False) is True

@@ -22,20 +22,39 @@ def _daemon_module() -> str | None:
     pays the full scientific-stack import (~0.6-0.9 s each, measured in
     the r13 bench's first-entry cold runs). Preloading in the daemon
     parent shares those pages copy-on-write with every fork. The module
-    must be importable by the worker interpreter via ``python -m``;
-    that holds when the package directory is on the worker's path (cwd
-    or an installed dist). A zip/egg-shipped package cannot host a
-    ``-m`` daemon entry, so fall back to the stock daemon if the import
-    or a real filesystem location can't be confirmed. Kill switch:
-    PREFIXTREE_DISABLE_DAEMON_PRELOAD=1."""
+    must be importable by the worker interpreter via ``python -m``, so
+    the package's parent directory must be on the path workers inherit
+    from this driver: ``PYTHONPATH``, the working directory (``-m``
+    puts it first on ``sys.path``, and local workers start in the
+    driver's) or the site dirs. A driver that reaches the package only
+    through its own runtime ``sys.path`` edits passes a driver-side
+    import, yet every daemon launch would die (``EOFException ...
+    reading the port number``); with the stock daemon the same setup
+    fails with ``ModuleNotFoundError: prefixtree_spark``, which names
+    the cause. A zip/egg-shipped package cannot host a ``-m`` daemon
+    entry either.
+    Kill switch: PREFIXTREE_DISABLE_DAEMON_PRELOAD=1."""
     if os.environ.get("PREFIXTREE_DISABLE_DAEMON_PRELOAD"):
         return None
     try:
         from prefixtree_spark import daemon as _d  # noqa: F401
 
-        if not os.path.isfile(getattr(_d, "__file__", "") or ""):
+        path = getattr(_d, "__file__", "") or ""
+        if not os.path.isfile(path):
             return None
     except Exception:
+        return None
+    import site
+
+    inherited = [
+        *os.environ.get("PYTHONPATH", "").split(os.pathsep),
+        os.getcwd(),
+        *site.getsitepackages(),
+        site.getusersitepackages(),
+    ]
+    # the directory holding the package: what a worker's path needs
+    parent = os.path.realpath(os.path.dirname(os.path.dirname(path)))
+    if parent not in {os.path.realpath(d) for d in inherited if d}:
         return None
     return "prefixtree_spark.daemon"
 

@@ -491,4 +491,4 @@ def pt_prefix_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefixes = cust.where("c_custkey % 37 = 0").select(
         F.substring(F.trim("c_name"), 1, 16).alias("p")
     )
-    return prefix_search(pt, prefixes, "p", colocated=True)
+    return prefix_search(pt, prefixes, "p")

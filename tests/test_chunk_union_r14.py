@@ -95,39 +95,65 @@ def test_chunk_broadcast_destroyed_after_pin(spark, monkeypatch):
         assert not bq._jbroadcast.isValid(), "chunk broadcast leaked"
 
 
-def test_auto_releases_own_pin_before_chunk_loop(spark, monkeypatch):
-    """With both sides big, auto colocates from its pinned tree and must
-    release that pin BEFORE the chunk loop starts — two full cached
-    trees overlap for one repartition pass, never for the whole loop."""
+def _spy_chunk_loop_pins(monkeypatch, pt):
+    """Record (pt cached, loop tree cached, loop tree is pt) each time
+    auto's chunk loop starts."""
     import prefixtree_spark.operators.query as qmod
 
     monkeypatch.setattr(qmod, "_AUTO_BROADCAST_NODES", 0)
     monkeypatch.setattr(qmod, "_AUTO_BROADCAST_QUERIES", 2)
-    pt = create(_words_df(spark, SPARSE_WORDS), "word", num_partitions=3)
-    qdf = spark.createDataFrame([(q,) for q in QUERIES], ["q"])
     at_loop = []
     real = qmod._query_funnel
 
     def spy(tree, *args, **kwargs):
         # auto's pin lives on the caller's frame object (persist()
-        # returns self); the loop's tree is the colocated pin
-        at_loop.append((_cached(pt), _cached(tree)))
+        # returns self)
+        at_loop.append((_cached(pt), _cached(tree), tree is pt))
         return real(tree, *args, **kwargs)
 
     monkeypatch.setattr(qmod, "_query_funnel", spy)
+    return at_loop
+
+
+def test_auto_releases_own_pin_before_chunk_loop(spark, monkeypatch):
+    """With both sides big, auto colocates a tree without the colocation
+    record from its pinned copy and must release that pin BEFORE the
+    chunk loop starts — two full cached trees overlap for one
+    repartition pass, never for the whole loop."""
+    built = create(_words_df(spark, SPARSE_WORDS), "word", num_partitions=3)
+    pt = built.select("*")  # a derived frame: no colocation record
+    qdf = spark.createDataFrame([(q,) for q in QUERIES], ["q"])
+    at_loop = _spy_chunk_loop_pins(monkeypatch, pt)
     got = {
         (r.query_string, r.node, r.final_distance)
         for r in query(pt, qdf, "q", 1, mode="auto").collect()
     }
     assert got == _expected(SPARSE_WORDS, QUERIES, 1)
-    assert at_loop == [(False, True)]
+    # the loop's tree is the colocated pin, auto's own pin is gone
+    assert at_loop == [(False, True, False)]
+    assert not _cached(pt)
+
+
+def test_auto_chunk_loop_walks_fresh_tree_in_place(spark, monkeypatch):
+    """A tree fresh from create carries the colocation record: auto's
+    chunk loop walks auto's own pin on it (no colocation copy) and
+    releases that pin when the call returns."""
+    pt = create(_words_df(spark, SPARSE_WORDS), "word", num_partitions=3)
+    qdf = spark.createDataFrame([(q,) for q in QUERIES], ["q"])
+    at_loop = _spy_chunk_loop_pins(monkeypatch, pt)
+    got = {
+        (r.query_string, r.node, r.final_distance)
+        for r in query(pt, qdf, "q", 1, mode="auto").collect()
+    }
+    assert got == _expected(SPARSE_WORDS, QUERIES, 1)
+    assert at_loop == [(True, True, True)]
     assert not _cached(pt)
 
 
 def test_caller_cache_survives_chunked_routes(spark, monkeypatch, tmp_path):
     """A cache the caller put on pt is theirs: neither auto's chunked
-    route nor query_groups(colocated=False) may evict it (each only
-    releases the colocation pin it created itself)."""
+    route nor query_groups may evict it (each only releases a pin it
+    created itself)."""
     import prefixtree_spark.operators.query as qmod
     from prefixtree_spark import query_groups, write_query_groups
 
@@ -166,7 +192,7 @@ def test_query_groups_union_bounded_by_fanout(spark, monkeypatch, tmp_path):
     path = str(tmp_path / "groups")
     n_groups = write_query_groups(qdf, "q", path, chunk_size=1)
     assert n_groups > 2
-    res = query_groups(pt, path, 2, colocated=True)
+    res = query_groups(pt, path, 2)
     assert _leaf_count(res) <= 2
     got = {(r.query_string, r.node, r.final_distance) for r in res.collect()}
     assert got == _expected(SPARSE_WORDS, QUERIES, 2)

@@ -1,6 +1,8 @@
-"""The one-shot distributed-tree route: forests colocated by range so
-each gets its own task, the result pinned eagerly, the query broadcast
-freed after the pin, and an unpinned tree plan evaluated only once."""
+"""The one-shot distributed-tree route: a tree without the colocation
+record gets its forests colocated by range so each gets its own task,
+the result is pinned eagerly, the query broadcast is freed after the
+pin, and an unpinned tree plan is evaluated only once. A tree fresh
+from create is walked in its build layout."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -36,8 +38,9 @@ def _forests_by_partition(df) -> list[set[int]]:
 def test_one_shot_route_gives_each_forest_its_own_task(spark, monkeypatch, mode):
     """Hash on compute_node at 1x parallelism put forests 0, 1 and 3 of
     a 4-forest tree into one task while other cores idled; the range
-    colocation must keep every forest whole and alone in its
-    partition."""
+    colocation of a derived frame (no colocation record) must keep
+    every forest whole and alone in its partition, as the build layout
+    of a fresh create output does."""
     import prefixtree_spark.operators.query as qmod
 
     layouts = []
@@ -52,13 +55,15 @@ def test_one_shot_route_gives_each_forest_its_own_task(spark, monkeypatch, mode)
     monkeypatch.setattr(qmod, "_traverse_forests", spy)
     pt = create(_words_df(spark, WORDS), "word", num_partitions=4)
     qdf = spark.createDataFrame([(q,) for q in QUERIES], ["q"])
-    got = {tuple(r) for r in query(pt, qdf, "q", 2, mode=mode).collect()}
-    assert got == _expected(WORDS, QUERIES, 2)
-    assert len(layouts) == 1
-    parts = layouts[0]
-    forests = [f for p in parts for f in p]
-    assert sorted(forests) == [0, 1, 2, 3], "each forest in exactly one partition"
-    assert max(len(p) for p in parts) == 1, f"forests share a task: {parts}"
+    # the derived frame moves every row off its build partition
+    for tree in (pt, pt.repartition(3)):
+        got = {tuple(r) for r in query(tree, qdf, "q", 2, mode=mode).collect()}
+        assert got == _expected(WORDS, QUERIES, 2)
+    assert len(layouts) == 2
+    for parts in layouts:
+        forests = [f for p in parts for f in p]
+        assert sorted(forests) == [0, 1, 2, 3], "each forest in exactly one partition"
+        assert max(len(p) for p in parts) == 1, f"forests share a task: {parts}"
 
 
 def test_auto_one_shot_destroys_query_broadcast(spark, monkeypatch):
@@ -90,8 +95,9 @@ def test_auto_one_shot_destroys_query_broadcast(spark, monkeypatch):
 
 def test_explicit_one_shot_evaluates_unpinned_tree_once(spark, monkeypatch):
     """The range colocation samples its input before shuffling it, so
-    explicit mode="broadcast_queries" on an unpersisted tree must pin
-    the tree for the call: the build's mapInPandas runs once per build
+    explicit mode="broadcast_queries" on an unpersisted derived tree
+    must pin the tree for the call; a fresh create output is walked in
+    place. Either way the build's mapInPandas runs once per build
     partition, the route's own pin is released, and a cache the caller
     put on pt survives the call."""
     import prefixtree_spark.operators.build as bmod
@@ -107,11 +113,19 @@ def test_explicit_one_shot_evaluates_unpinned_tree_once(spark, monkeypatch):
     qdf = spark.createDataFrame([(q,) for q in QUERIES], ["q"])
     want = _expected(WORDS, QUERIES, 2)
 
-    pt = create(_words_df(spark, WORDS), "word", num_partitions=4)
-    got = {tuple(r) for r in query(pt, qdf, "q", 2, mode="broadcast_queries").collect()}
-    assert got == want
-    assert runs.value == 4, f"build ran {runs.value} partition passes, want 4"
-    assert not _cached(pt), "the route's own pin on pt was not released"
+    for derive in (False, True):
+        before = runs.value
+        pt = create(_words_df(spark, WORDS), "word", num_partitions=4)
+        if derive:
+            pt = pt.select("*")  # no colocation record
+        got = {
+            tuple(r)
+            for r in query(pt, qdf, "q", 2, mode="broadcast_queries").collect()
+        }
+        assert got == want
+        n = runs.value - before
+        assert n == 4, f"build ran {n} partition passes, want 4 (derive={derive})"
+        assert not _cached(pt), "the route's own pin on pt was not released"
 
     pt2 = create(_words_df(spark, WORDS), "word", num_partitions=4).persist()
     try:

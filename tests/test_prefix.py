@@ -16,19 +16,24 @@ def _expected(words, prefixes):
     }
 
 
-@pytest.mark.parametrize("colocated", [True, False])
+@pytest.mark.parametrize("fresh", [True, False])
 @pytest.mark.parametrize("parts", [1, 3])
-def test_prefix_search_vs_brute(spark, colocated, parts):
+def test_prefix_search_vs_brute(spark, fresh, parts):
+    """fresh: the cached create output, which carries the colocation
+    record and is walked in place. Otherwise a derived frame whose
+    round-robin repartition splits the forests, which prefix_search
+    colocates itself."""
     pt = create(_words_df(spark, SPARSE_WORDS), "word", num_partitions=parts)
-    if colocated and parts > 1:
+    if fresh:
         pt = pt.cache()
         pt.count()
+    else:
+        pt = pt.repartition(4)
     pdf = spark.createDataFrame([(p,) for p in PREFIXES], ["p"])
-    got = {
-        (r.prefix, r.word)
-        for r in prefix_search(pt, pdf, "p", colocated=colocated).collect()
-    }
+    got = {(r.prefix, r.word) for r in prefix_search(pt, pdf, "p").collect()}
     assert got == _expected(SPARSE_WORDS, PREFIXES)
+    if fresh:
+        pt.unpersist()
 
 
 def test_prefix_search_serving_handle(spark):

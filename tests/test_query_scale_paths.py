@@ -16,8 +16,10 @@ def _plan(df):
 
 
 def test_colocated_zero_shuffle_plan_and_results(spark, monkeypatch):
-    """colocated=True traverses in place. The route returns an eager
-    checkpoint, so the plan is read off the traversal frame itself."""
+    """A cached tree fresh from create carries the colocation record and
+    is traversed in place, with no caller flag. The route returns an
+    eager checkpoint, so the plan is read off the traversal frame
+    itself."""
     import prefixtree_spark.operators.query as qmod
 
     traversed = []
@@ -32,7 +34,7 @@ def test_colocated_zero_shuffle_plan_and_results(spark, monkeypatch):
     pt = create(_words_df(spark, SPARSE_WORDS), "word", num_partitions=3).cache()
     pt.count()
     qdf = spark.createDataFrame([(q,) for q in QUERIES], ["q"])
-    res = query(pt, qdf, "q", 2, mode="broadcast_queries", colocated=True)
+    res = query(pt, qdf, "q", 2, mode="broadcast_queries")
     assert len(traversed) == 1
     plan = _plan(traversed[0])
     assert "InMemoryTableScan" in plan
@@ -260,14 +262,15 @@ def test_reusable_index_handle(spark):
 
 
 def test_bucketed_tree_partitioned_bfs(spark):
-    """bfs with tree_partitioned=True over a bucketed index: same
-    results, and the tree side's scan is not re-shuffled upfront."""
+    """bfs over a bucketed index (the layout is detected, no flag):
+    same results, and the tree side's scan is not re-shuffled
+    upfront."""
     pt = create(_words_df(spark, SPARSE_WORDS), "word", num_partitions=3)
     save_index_bucketed(pt, "pt_bucketed_bfs_test", buckets=4)
     try:
         loaded = load_index_bucketed(spark, "pt_bucketed_bfs_test")
         qdf = spark.createDataFrame([(q,) for q in QUERIES], ["q"])
-        res = query(loaded, qdf, "q", 1, mode="bfs", tree_partitioned=True)
+        res = query(loaded, qdf, "q", 1, mode="bfs")
         got = {(r.query_string, r.node, r.final_distance) for r in res.collect()}
         assert got == _expected(SPARSE_WORDS, QUERIES, 1)
     finally:
@@ -421,7 +424,7 @@ def test_public_reshard_reusable_across_queries(spark, monkeypatch):
         )
         qdf = spark.createDataFrame([(q,) for q in QUERIES], ["q"])
         for _ in range(2):  # repeated batches, no rebuild either time
-            res = qmod.query(pt2, qdf, "q", 1, mode="auto", colocated=True)
+            res = qmod.query(pt2, qdf, "q", 1, mode="auto")
             got = {
                 (r.query_string, r.node, r.final_distance)
                 for r in res.collect()
@@ -465,7 +468,7 @@ def test_auto_routes_midsize_tree_to_distributed_traversal(spark, monkeypatch):
     )
     pt = create(_words_df(spark, SPARSE_WORDS), "word", num_partitions=3)
     qdf = spark.createDataFrame([(q,) for q in QUERIES], ["q"])
-    res = qmod.query(pt, qdf, "q", 1, mode="auto", colocated=True)
+    res = qmod.query(pt, qdf, "q", 1, mode="auto")
     got = {(r.query_string, r.node, r.final_distance) for r in res.collect()}
     assert routed == [len(set(QUERIES))]
     assert got == _expected(SPARSE_WORDS, QUERIES, 1)
@@ -513,16 +516,14 @@ def test_filegroups_mode_matches_other_modes(spark, monkeypatch):
 
 
 def test_filegroups_colocated_zero_shuffle(spark):
-    """colocated=True filegroups must keep the tree side shuffle-free,
-    exactly like the broadcast-chunked path."""
+    """filegroups over a cached fresh create output must keep the tree
+    side shuffle-free, exactly like the broadcast-chunked path."""
     import prefixtree_spark.operators.query as qmod
 
     pt = create(_words_df(spark, SPARSE_WORDS), "word", num_partitions=3).cache()
     pt.count()
     qdf = spark.createDataFrame([(q,) for q in QUERIES], ["q"])
-    res = qmod._query_filegroups(
-        pt, qdf.select(F.col("q")).distinct(), 1, colocated=True
-    )
+    res = qmod._query_filegroups(pt, qdf.select(F.col("q")).distinct(), 1)
     got = {(r.query_string, r.node, r.final_distance) for r in res.collect()}
     assert got == _expected(SPARSE_WORDS, QUERIES, 1)
     pt.unpersist()

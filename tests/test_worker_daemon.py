@@ -2,8 +2,10 @@
 interpreter so the patched ``zipimporter`` stays out of this process):
 ``importlib.invalidate_caches()`` — which every Spark Python task calls
 — must not re-read an unchanged archive, and must still pick up a
-changed one."""
+changed one. And the session's choice of the daemon: only when workers
+can import the package."""
 
+import os
 import subprocess
 import sys
 import textwrap
@@ -49,3 +51,58 @@ def test_invalidate_caches_rereads_only_changed_archives(tmp_path):
     )
     assert out.returncode == 0, out.stderr
     assert out.stdout.strip() == "ok"
+
+
+PATH_CHILD = textwrap.dedent(
+    """
+    import importlib.util, sys
+    root, work = sys.argv[1], sys.argv[2]
+    sys.path.insert(0, root)  # an in-process edit no worker inherits
+    from prefixtree_spark.session import _daemon_module
+    print(_daemon_module())
+    spec = importlib.util.spec_from_file_location("pb_run", f"{root}/perfbench/run.py")
+    run = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(run)
+    run.pin_env(work)  # the benchmark's environment: PYTHONPATH names the checkout
+    print(_daemon_module())
+    """
+)
+
+
+def test_daemon_needs_package_on_worker_path(tmp_path):
+    """A driver that reaches the package only through its own sys.path
+    edit must not get the preload daemon: workers could not import it
+    and every launch would die reading the daemon's port, where the
+    stock daemon fails with ModuleNotFoundError naming the package.
+    perfbench's pin_env puts the checkout on PYTHONPATH, so the daemon
+    is chosen there."""
+    env = {
+        k: v
+        for k, v in os.environ.items()
+        if k not in ("PYTHONPATH", "PREFIXTREE_DISABLE_DAEMON_PRELOAD")
+    }
+    out = subprocess.run(
+        [sys.executable, "-c", PATH_CHILD, str(ROOT), str(tmp_path / "work")],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    assert out.returncode == 0, out.stderr
+    assert out.stdout.split() == ["None", "prefixtree_spark.daemon"]
+
+
+def test_daemon_chosen_in_this_session(spark):
+    """The test suite runs from the checkout root, which workers inherit
+    as their working directory: the preload daemon stays on unless its
+    kill switch is set."""
+    from prefixtree_spark.session import _daemon_module
+
+    want = (
+        None
+        if os.environ.get("PREFIXTREE_DISABLE_DAEMON_PRELOAD")
+        else "prefixtree_spark.daemon"
+    )
+    assert _daemon_module() == want
+    assert spark.sparkContext.getConf().get("spark.python.daemon.module") == want

@@ -46,7 +46,7 @@ def main() -> None:
     qdf = cust.where("c_custkey % 100 = 7").select(
         F.expr("substring(c_name, 1, 12)").alias("q")
     )
-    res = query(pt, qdf, "q", 1, mode="broadcast_queries", colocated=True)
+    res = query(pt, qdf, "q", 1, mode="broadcast_queries")
     grab(
         "Fuzzy query — distributed tree, colocated (zero-shuffle) traversal",
         res,

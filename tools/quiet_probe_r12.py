@@ -66,9 +66,9 @@ def probe_damerau(sf_dir):
     qd = queries.select(F.trim("q").alias("q")).where(F.col("q") != "").distinct()
 
     def phase_query():
-        holder["cand"] = query(
-            holder["pt"], qd, "q", 2, mode="auto", colocated=True
-        ).localCheckpoint(eager=True)
+        holder["cand"] = query(holder["pt"], qd, "q", 2, mode="auto").localCheckpoint(
+            eager=True
+        )
 
     timed(phase_query, "damerau_phase_tree_query_k2", n_warm=4)
 

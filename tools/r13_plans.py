@@ -81,7 +81,7 @@ def main() -> None:
         grab("fuzzy_tree_k1", query(pt, qdf, "q", 1, mode="broadcast_tree"))
         grab(
             "fuzzy_tree_distributed_k1",
-            query(pt, qdf, "q", 1, mode="broadcast_queries", colocated=True),
+            query(pt, qdf, "q", 1, mode="broadcast_queries"),
         )
         pt.unpersist()
 

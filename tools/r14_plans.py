@@ -99,7 +99,7 @@ def main() -> None:
             qmod.write_query_groups(
                 qdf, "q", root, chunk_size=max(1, -(-n_q // 100))
             )
-            grab("union_bound_100chunks", qmod.query_groups(pt, root, 1, colocated=True))
+            grab("union_bound_100chunks", qmod.query_groups(pt, root, 1))
         finally:
             shutil.rmtree(root, ignore_errors=True)
         pt.unpersist()
