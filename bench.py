@@ -235,14 +235,13 @@ def main() -> None:
 
     # prefix-tree skew stress (round-10 verdict #7, the SURVEY §4
     # salting case): a dictionary where ONE hot prefix ("CORP") holds
-    # ~50% of the words. The reference's prefix-locality layout
-    # (prefix_len=4 — the hot prefix length) hashes every CORP* word
-    # to ONE partition: that worker builds half the tree and does half
-    # of every colocated query's join work — the straggler. The
-    # engine's DEFAULT layout (hash on the whole word) spreads the
-    # same words uniformly — the mitigation, on by default. Wall time
-    # for build and distributed query per layout, plus the
-    # deterministic layout evidence (max partition's node share).
+    # ~50% of the words. A prefix-keyed layout (the reference's
+    # dist_length) would put every CORP* word in ONE partition: that
+    # worker builds half the tree and does half of every colocated
+    # query's join work — the straggler. The engine's word-range layout
+    # splits the hot prefix across as many ranges as its weight needs.
+    # Wall time for build and distributed query, plus the deterministic
+    # layout evidence (max partition's node share).
     n_sk_w = max(4_000, int(200_000 * float(sf)))
     skew_words = (
         spark.range(n_sk_w // 2)
@@ -263,31 +262,22 @@ def main() -> None:
     )
     extras["fuzzy_skew_n_words"] = n_sk_w
     extras["fuzzy_skew_n_queries"] = skew_q.count()
-    skew_pt = {}
-    for tag, kw in (("prefixlocal", {"prefix_len": 4}), ("hash", {})):
-        t0 = time.time()
-        pt_sk = create(skew_words, "w", **kw).persist()
-        n_nodes = pt_sk.count()
-        extras[f"fuzzy_skew_build_{tag}_sec"] = round(time.time() - t0, 3)
-        part_counts = [
-            r[1]
-            for r in pt_sk.groupBy(F.spark_partition_id())
-            .count()
-            .collect()
-        ]
-        extras[f"fuzzy_skew_maxpart_frac_{tag}"] = round(
-            max(part_counts) / max(1, n_nodes), 3
-        )
-        skew_pt[tag] = pt_sk
-        bench(
-            f"fuzzy_skew_query_{tag}",
-            lambda tag=tag: query(
-                skew_pt[tag], skew_q, "q", 1, mode="broadcast_queries"
-            ).count(),
-            extra=True,
-        )
-    for pt_sk in skew_pt.values():
-        pt_sk.unpersist()
+    t0 = time.time()
+    pt_sk = create(skew_words, "w").persist()
+    n_nodes = pt_sk.count()
+    extras["fuzzy_skew_build_range_sec"] = round(time.time() - t0, 3)
+    part_counts = [
+        r[1] for r in pt_sk.groupBy(F.spark_partition_id()).count().collect()
+    ]
+    extras["fuzzy_skew_maxpart_frac_range"] = round(
+        max(part_counts) / max(1, n_nodes), 3
+    )
+    bench(
+        "fuzzy_skew_query_range",
+        lambda: query(pt_sk, skew_q, "q", 1, mode="broadcast_queries").count(),
+        extra=True,
+    )
+    pt_sk.unpersist()
     skew_words.unpersist()
     skew_q.unpersist()
 

@@ -9,25 +9,30 @@ partition's words" expressed as scan-friendly dataflow (SURVEY.md §3.1).
 
 Our plan keeps the same shape and the same single shuffle:
 
-  read → select/trim/filter → repartition(N, substring(col, 1, p))
+  read → select/trim/filter → repartition(N, word range)
        → mapInPandas(per-partition in-memory radix-tree builder)
+
+where the N word ranges come from one sampling job at ``create`` time.
 
 The per-partition builder directly subsumes the reference's
 MarkNodes/AssignNodeIDs/GetID/GetNode C++ kernels and the
 NORMALIZE + SORT + ROLLUP dedup/aggregate steps (PrefixTree.ecl:101-299)
 — verified equivalent in SURVEY.md §0. Duplicate words are deduped at
-build (partition-local ``set`` — global, because identical words share a
-full prefix and therefore a partition), fixing the reference's
-duplicate-end-cap quirk (PrefixTree.ecl:205-208, SURVEY.md §0 Quirk 2).
+build (partition-local ``set`` — global, because identical words fall
+in the same word range and therefore the same partition), fixing the
+reference's duplicate-end-cap quirk (PrefixTree.ecl:205-208, SURVEY.md
+§0 Quirk 2).
 
 Scale notes (100 TB):
   - one shuffle, then embarrassingly parallel; scale = partition count.
   - global node-id uniqueness is coordination-free: per-partition id
     blocks of 1e14 (PrefixTree.ecl:172-181).
+  - each forest holds a contiguous slice of the sorted dictionary, so
+    the forests concatenated are, to within a few duplicated boundary
+    roots, the one merged trie: a collected tree needs no re-merge.
   - correctness is partition-independent (every partition builds an
     independent forest rooted at parent_id=0; queries fan out to all
-    roots — SURVEY.md §0), so skewed prefixes can be salted or split by
-    raising ``prefix_len`` with no semantic effect.
+    roots — SURVEY.md §0), so a layout is only ever a cost choice.
 """
 
 from __future__ import annotations
@@ -47,6 +52,8 @@ from prefixtree_spark.plans.tree import (
     mark_colocated,
     n_forests_hint,
     set_n_forests_hint,
+    set_word_bounds_hint,
+    word_bounds_hint,
 )
 
 # Sentinel child key for end-cap leaves: a unique object, so it cannot
@@ -453,12 +460,102 @@ def _trim_fn(trim: str):
     return fn
 
 
+def _sample_word_bounds(words: DataFrame, n: int) -> list[str]:
+    """The n-1 bounds that split ``words`` into n ranges of about equal
+    weight, by the sketch Spark's RangePartitioner draws (a reservoir
+    per input partition, each sample weighted by its partition's size),
+    at 600 samples per range (capped at 3M in all) where Spark takes 60,
+    so a range's share errs by about 4%, not 13%. Drawn ONCE, in one
+    job: the bounds are constants of the build plan, and a word's
+    forest is the same on every evaluation of the tree."""
+    if n <= 1:
+        return []
+    per_part = -(-min(600 * n, 3_000_000) // max(1, words.rdd.getNumPartitions()))
+
+    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import numpy as np
+        from pyspark import TaskContext
+
+        rng = np.random.default_rng(TaskContext.get().partitionId())
+        kept, keys, seen = np.empty(0, dtype=object), np.empty(0), 0
+        for pdf in batches:
+            seen += len(pdf)
+            kept = np.concatenate([kept, pdf["word"].to_numpy(dtype=object)])
+            keys = np.concatenate([keys, rng.random(len(pdf))])
+            if len(kept) > per_part:  # bottom-k of random keys = a reservoir
+                top = np.argpartition(keys, per_part)[:per_part]
+                kept, keys = kept[top], keys[top]
+        if len(kept):
+            yield pd.DataFrame({"word": kept, "weight": seen / len(kept)})
+
+    rows = sorted(
+        (r.word, r.weight)
+        for r in words.mapInPandas(sample, "word string, weight double").collect()
+    )
+    step = sum(w for _, w in rows) / n
+    bounds: list[str] = []
+    cum = 0.0
+    for word, weight in rows:
+        cum += weight
+        if cum >= step * (len(bounds) + 1) and (not bounds or word > bounds[-1]):
+            bounds.append(word)
+            if len(bounds) == n - 1:
+                break
+    return bounds
+
+
+def _murmur3_int(v: int) -> int:
+    """Spark's ``hash`` of an int value (Murmur3_x86_32.hashInt, seed
+    42): the hash ``repartition(n, col)`` takes pmod n of."""
+    m = 0xFFFFFFFF
+    k = (v * 0xCC9E2D51) & m
+    k = (((k << 15) | (k >> 17)) * 0x1B873593) & m
+    h = 42 ^ k
+    h = ((((h << 13) | (h >> 19)) & m) * 5 + 0xE6546B64) & m
+    h ^= 4
+    h = ((h ^ (h >> 16)) * 0x85EBCA6B) & m
+    h = ((h ^ (h >> 13)) * 0xC2B2AE35) & m
+    h ^= h >> 16
+    return h - (1 << 32) if h >> 31 else h
+
+
+def _partition_keys(n: int) -> list[int]:
+    """``keys[p]``: the smallest int that ``repartition(n, ·)`` sends to
+    partition p. Routing range p to ``keys[p]`` lands it in partition p
+    exactly; hashing the range index itself would collide (murmur3 of
+    0..n-1 fills 2/5/10/18/37 of 4/8/16/32/64 buckets, see
+    ``_colocate_forests``)."""
+    first: dict[int, int] = {}
+    v = 0
+    while len(first) < n:
+        first.setdefault(_murmur3_int(v) % n, v)
+        v += 1
+    return [first[p] for p in range(n)]
+
+
+def _range_pid(word: Column, bounds, keys) -> Column:
+    """The one word-range routing: ``keys[i]`` for the range i covering
+    ``word`` (``bounds[i-1] <= word < bounds[i]``). A balanced CASE tree
+    over constant bounds: log2(n) JVM string compares per word, and the
+    same answer on every evaluation. ``create`` places its words with
+    it; ``add_words`` routes new words with it."""
+
+    def pick(lo: int, hi: int) -> Column:
+        if lo == hi:
+            return F.lit(keys[lo])
+        mid = (lo + hi + 1) // 2
+        return F.when(word < F.lit(bounds[mid - 1]), pick(lo, mid - 1)).otherwise(
+            pick(mid, hi)
+        )
+
+    return pick(0, len(bounds)).cast("int")
+
+
 def create(
     df: DataFrame,
     col: str | Column,
     *,
     num_partitions: int | None = None,
-    prefix_len: int | None = None,
     max_word_len: int = 255,
     builder: str = "auto",
     keep_duplicates: bool = False,
@@ -470,18 +567,23 @@ def create(
 
     ≡ ``Create(infile, infield, dist_length)`` (PrefixTree.ecl:50-301).
 
-    Partitioning (the build's ONLY shuffle, ≡ DISTRIBUTE HASH,
-    PrefixTree.ecl:84): by default words are hash-partitioned on the
-    WHOLE word — skew-proof (uniform load at any scale) and still
-    globally deduplicating, since identical words always colocate.
-    ``prefix_len`` opts into the reference's prefix-locality strategy
-    (``dist_length``, PrefixTree.ecl:57-63): colocating shared prefixes
-    shrinks the total node count slightly, but any prefix whose weight
-    exceeds 1/num_partitions serializes the build onto one worker
-    (measured: uniform-prefix dictionaries collapse to a SINGLE
-    partition at prefix_len ≤ the common-prefix length — fatal at
-    100 TB). Correctness is partition-independent either way
-    (SURVEY.md §0), so this is purely a layout choice.
+    Partitioning (the build's ONLY shuffle, ≡ DISTRIBUTE,
+    PrefixTree.ecl:84): words are RANGE-partitioned on the whole word.
+    One sampling job at call time draws the N-1 range bounds
+    (``_sample_word_bounds``, RangePartitioner's sketch); the shuffle
+    then routes each word by those constant bounds (``_range_pid``),
+    so forest ``i`` holds exactly the words of range ``i`` on every
+    evaluation of the returned frame, cached or not. Each forest holds
+    a contiguous slice of the sorted dictionary — the reference's
+    prefix locality (``dist_length``, PrefixTree.ecl:57-63) without its
+    skew: a hot prefix is split across as many ranges as its weight
+    needs, where a prefix hash would serialize it onto one worker.
+    Identical words share a range, so dedup stays global, and the
+    forests concatenated are in effect the merged trie
+    (``build_local_index`` collects them as they are). The bounds ride
+    with the frame (``plans.tree.word_bounds_hint``; ``save_index``
+    stores them), and ``add_words`` routes new words by them.
+    Correctness is partition-independent either way (SURVEY.md §0).
 
     ``builder`` selects the per-partition construction strategy:
     ``"auto"`` (default) builds in memory while the estimated trie
@@ -535,11 +637,8 @@ def create(
     if max_word_len is not None:
         words = words.where(F.length("word") <= max_word_len)
     n = num_partitions or words.sparkSession.sparkContext.defaultParallelism
-    key = F.col("word") if prefix_len is None else F.substring("word", 1, prefix_len)
-    words = words.repartition(n, key)
     schema = PT_SCHEMA_DUP if keep_duplicates else PT_SCHEMA
     if builder == "streaming":
-        words = words.sortWithinPartitions("word")
 
         def build(it):
             return _build_partition_streaming(it, keep_duplicates=keep_duplicates)
@@ -554,13 +653,16 @@ def create(
 
     else:
         raise ValueError(f"unknown builder {builder!r}")
+    bounds = _sample_word_bounds(words, n)
+    words = words.repartition(n, _range_pid(F.col("word"), bounds, _partition_keys(n)))
+    if builder == "streaming":
+        words = words.sortWithinPartitions("word")
     # each build task emits whole forests, so the output is colocated by
-    # construction; and the build KNOWS its forest count (the
-    # repartition N), so the delta paths (add_words/remove_words plan
-    # gates + routing) skip their per-call max(compute_node) probe job
-    return mark_colocated(
-        set_n_forests_hint(words.mapInPandas(build, schema=schema), n)
-    )
+    # construction; and the build KNOWS its forest count and ranges, so
+    # the delta paths (add_words/remove_words plan gates + routing) skip
+    # their per-call probe jobs
+    pt = set_n_forests_hint(words.mapInPandas(build, schema=schema), n)
+    return mark_colocated(set_word_bounds_hint(pt, bounds))
 
 
 def save_index(pt: DataFrame, path: str) -> None:
@@ -571,11 +673,12 @@ def save_index(pt: DataFrame, path: str) -> None:
     covering-index payload (PrefixTree.ecl:612, SURVEY.md §2.1 S4).
 
     Alongside the data, a tiny ``_pt_meta`` sidecar stores the forest
-    count (underscore-prefixed → invisible to the parquet reader), so
+    count and, when the frame carries them, ``create``'s word-range
+    bounds (underscore-prefixed → invisible to the parquet reader), so
     every future ``add_words``/``remove_words`` on the loaded table
-    skips its per-call max(compute_node) probe job — the count is paid
-    ONCE here (from the build hint when the frame carries it, else one
-    cheap single-column scan of the just-written files), not per delta.
+    skips its per-call probe jobs — the count is paid ONCE here (from
+    the build hint when the frame carries it, else one cheap
+    single-column scan of the just-written files), not per delta.
     """
     pt.write.mode("overwrite").parquet(path)
     spark = pt.sparkSession
@@ -587,10 +690,13 @@ def save_index(pt: DataFrame, path: str) -> None:
             if mx is not None
             else spark.sparkContext.defaultParallelism
         )
-    _write_index_meta(spark, path, int(n))
+    meta: dict = {"n_forests": int(n)}
+    if word_bounds_hint(pt) is not None:
+        meta["bounds"] = list(word_bounds_hint(pt))
+    _write_index_meta(spark, path, meta)
 
 
-def _write_index_meta(spark: SparkSession, path: str, n_forests: int) -> None:
+def _write_index_meta(spark: SparkSession, path: str, meta: dict) -> None:
     import json
 
     from prefixtree_spark.sources.io import _fs
@@ -599,12 +705,12 @@ def _write_index_meta(spark: SparkSession, path: str, n_forests: int) -> None:
     p = jvm.org.apache.hadoop.fs.Path(f"{path}/_pt_meta")
     out = fs.create(p, True)
     try:
-        out.write(bytearray(json.dumps({"n_forests": n_forests}).encode()))
+        out.write(bytearray(json.dumps(meta).encode()))
     finally:
         out.close()
 
 
-def _read_index_meta(spark: SparkSession, path: str) -> int | None:
+def _read_index_meta(spark: SparkSession, path: str) -> dict:
     import json
 
     from prefixtree_spark.sources.io import _fs, _read_small_file
@@ -612,12 +718,10 @@ def _read_index_meta(spark: SparkSession, path: str) -> int | None:
     try:
         fs, jvm = _fs(spark, path)
         if not fs.exists(jvm.org.apache.hadoop.fs.Path(f"{path}/_pt_meta")):
-            return None
-        return int(
-            json.loads(_read_small_file(spark, f"{path}/_pt_meta"))["n_forests"]
-        )
+            return {}
+        return json.loads(_read_small_file(spark, f"{path}/_pt_meta"))
     except Exception:
-        return None  # pre-meta saves / foreign files: probe instead
+        return {}  # pre-meta saves / foreign files: probe instead
 
 
 def _colocate_forests(pt: DataFrame) -> DataFrame:
@@ -667,9 +771,11 @@ def load_index(spark: SparkSession, path: str, *, colocated: bool = False) -> Da
     df = spark.read.parquet(path)
     if colocated:
         df = _colocate_forests(df)
-    n = _read_index_meta(spark, path)
-    if n is not None:
-        set_n_forests_hint(df, n)
+    meta = _read_index_meta(spark, path)
+    if "n_forests" in meta:
+        set_n_forests_hint(df, int(meta["n_forests"]))
+    if "bounds" in meta:
+        set_word_bounds_hint(df, meta["bounds"])
     return df
 
 

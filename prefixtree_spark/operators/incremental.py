@@ -7,11 +7,13 @@ vocabulary re-flows through DISTRIBUTE + ITERATE + NORMALIZE + ROLLUP,
 PrefixTree.ecl:50-301). For a 100 TB dictionary the raw corpus
 re-shuffle is the cost that matters; here only
 
-  - the DELTA words shuffle (routed with the same whole-word hash
-    ``create`` uses, so a delta word joins the forest holding its
-    prefix-sharing neighbors — mis-routing is impossible to get wrong:
-    correctness is partition-independent, SURVEY.md §0, so at worst a
-    wrongly-routed word costs prefix sharing, never answers), and
+  - the DELTA words shuffle (each routed to the forest whose word
+    range covers it — ``create`` builds one forest per contiguous range
+    of the sorted dictionary — so a delta word joins its prefix-sharing
+    neighbors and a churned tree keeps the range layout; mis-routing is
+    impossible to get wrong: correctness is partition-independent,
+    SURVEY.md §0, so at worst a wrongly-routed word costs prefix
+    sharing, never answers), and
   - the existing NODE table moves once through a cogroup on its build
     partition (already-deduplicated, prefix-compressed rows — far
     smaller than the corpus),
@@ -41,6 +43,7 @@ from prefixtree_spark.operators.build import (
     _emit,
     _insert,
     _new_node,
+    _range_pid,
     _trim_fn,
 )
 from prefixtree_spark.plans.tree import (
@@ -49,6 +52,8 @@ from prefixtree_spark.plans.tree import (
     PT_SCHEMA,
     n_forests_hint,
     set_n_forests_hint,
+    set_word_bounds_hint,
+    word_bounds_hint,
 )
 
 
@@ -127,7 +132,8 @@ def remove_words(
     OWN layout, not by re-hashing: each word finds its forest through
     an equi-join against the end-cap rows (``is_word`` nodes carry the
     full word), so removal is exact under ANY historical partitioning
-    — prefix_len builds, add_words growth, repartitioned reloads. Cost:
+    — word-range or older hash builds, add_words growth, repartitioned
+    reloads. Cost:
     one equi-join over the (prefix-compressed) end-caps + a rebuild of
     only the forests that actually lose words; untouched forests pass
     through row-identical. Surviving nodes keep their ids; no new ids
@@ -212,6 +218,8 @@ def remove_words(
         out_hint = n_forests
 
     def _out(df: DataFrame) -> DataFrame:
+        if word_bounds_hint(pt) is not None:  # removal keeps the ranges
+            set_word_bounds_hint(df, word_bounds_hint(pt))
         return df if out_hint is None else set_n_forests_hint(df, out_hint)
 
     if not pruned:
@@ -243,7 +251,6 @@ def add_words(
     col: str | Column,
     *,
     max_word_len: int = 255,
-    prefix_len: int | None = None,
     trim: str = "both",
     pruned: bool | None = None,
     bytes: bool = False,
@@ -253,16 +260,26 @@ def add_words(
     to ``create(old_words ∪ delta)`` — pinned by property tests and the
     ``pt_add_words`` oracle workload.
 
-    ``prefix_len``, ``trim``, and ``bytes`` must match the values used
-    at ``create`` time: a prefix_len mismatch only costs locality
-    (extra roots are harmless, SURVEY.md §0), but a trim mismatch
-    changes WHICH word the delta spells on a ``trim="right"`` index
-    (leading spaces are significant there), and a bytes mismatch
-    inserts codepoint strings into a byte-surrogate tree (or vice
-    versa), silently corrupting non-ASCII entries. ``keep_duplicates`` tables are not
-    supported (the multiplicity column would need merge semantics —
-    rebuild instead). ``pruned`` as in ``remove_words``: sparse deltas
-    route only touched forests through Python (auto by default).
+    Routing follows ``create``'s word-range layout: every genuinely-new
+    word goes to the forest whose range covers it, by the range bounds
+    that ride with the tree (``create``, ``load_index`` of a
+    ``save_index`` output, and this function's own output carry them).
+    A frame without them pays one small job that reads each forest's
+    lowest end-cap word (n rows) and routes to the greatest such bound
+    ≤ the word (words below every bound go to the first forest; an
+    emptied table restarts in forest 0). Either way each forest still
+    holds a contiguous word range, and the collected tree stays, in
+    effect, merged.
+
+    ``trim`` and ``bytes`` must match the values used at ``create``
+    time: a trim mismatch changes WHICH word the delta spells on a
+    ``trim="right"`` index (leading spaces are significant there), and
+    a bytes mismatch inserts codepoint strings into a byte-surrogate
+    tree (or vice versa), silently corrupting non-ASCII entries.
+    ``keep_duplicates`` tables are not supported (the multiplicity
+    column would need merge semantics — rebuild instead). ``pruned`` as
+    in ``remove_words``: sparse deltas route only touched forests
+    through Python (auto by default).
     """
     if "n_copies" in pt.columns:
         raise ValueError("add_words does not support keep_duplicates tables")
@@ -290,41 +307,39 @@ def add_words(
 
     # Existing words are dropped INDEX-SIDE (anti-join on the end-cap
     # rows, which carry the full word — the same layout-independent
-    # routing remove_words uses) BEFORE any repartitioning. This is a
-    # correctness requirement, not an optimization: hash-routing an
-    # EXISTING word with a forest count that differs from the build's
-    # (empty build partitions make max(compute_node)+1 undercount; a
-    # prefix_len mismatch changes the key outright) would land it in a
-    # different forest than its end-cap, the merge's existing-set check
-    # there would miss it, and distributed query modes would return the
-    # word TWICE. With only genuinely-new words left, any routing is
-    # correct — one partition per word by construction — and the
-    # forest count reverts to a pure locality/parallelism choice.
+    # routing remove_words uses) BEFORE any routing. This is a
+    # correctness requirement, not an optimization: routing an EXISTING
+    # word by the range bounds could land it in a different forest than
+    # its end-cap (a tree whose forests are not word ranges — an older
+    # hash build, a repartitioned reload), the merge's existing-set
+    # check there would miss it, and distributed query modes would
+    # return the word TWICE. With only genuinely-new words left, any
+    # routing is correct — one partition per word by construction — and
+    # the range lookup is a pure locality choice.
     words = words.join(
         pt.where("is_word").select(F.col("node").alias("word")),
         "word",
         "left_anti",
     )
-    n = n_forests_hint(pt)  # create/load_index hint: skips the probe job
-    if n is None:
-        max_cn = pt.agg(F.max("compute_node")).first()[0]
-        n = (
-            int(max_cn) + 1
-            if max_cn is not None  # empty table (e.g. remove_words drained
-            else pt.sparkSession.sparkContext.defaultParallelism  # it) restarts fresh
+    bounds = word_bounds_hint(pt)
+    if bounds is not None:  # create's ranges: forest i covers range i
+        keys = list(range(len(bounds) + 1))
+    else:
+        # no bounds ride with this frame: read each forest's lowest
+        # end-cap word (one job, n rows back); forest i then covers
+        # [low_i, low_{i+1}), the first forest everything below
+        lows = sorted(
+            (r[1], int(r[0]))
+            for r in pt.where("is_word")
+            .groupBy("compute_node")
+            .agg(F.min("node"))
+            .collect()
         )
-    key = F.col("word") if prefix_len is None else F.substring("word", 1, prefix_len)
-    # route as a COLUMN (pmod of the same Murmur3 hash HashPartitioning
-    # uses) instead of repartition + TaskContext tagging: the pid set
-    # is then collectable without a second shuffle, and — per the
-    # routing-correctness note above — any deterministic per-word pid
-    # is correct for genuinely-new words, so matching the build's
-    # partitioner is a locality nicety, not a requirement.
-    delta = words.select(
-        F.pmod(F.hash(key), F.lit(n)).cast("int").alias("pid"), "word"
-    )
+        bounds = [w for w, _ in lows[1:]]
+        keys = [p for _, p in lows] or [0]  # an emptied table restarts at 0
+    delta = words.select(_range_pid(F.col("word"), bounds, keys).alias("pid"), "word")
     # |touched| ≤ n_raw: a small batch proves sparseness
-    sparse = pruned if pruned is not None else (2 * n_raw < n)
+    sparse = pruned if pruned is not None else (2 * n_raw < len(keys))
     if sparse:
         # pin the delta (consumed by the touched-pid collect AND the
         # cogroup; bounded by |new words| — the anti-join already
@@ -357,21 +372,24 @@ def add_words(
         return pd.DataFrame(list(_emit(root, pid, next_id)), columns=PT_COLUMNS)
 
     # sparse deltas prune; bulk deltas keep the one-shot cogroup with
-    # no extra jobs (same gate and rationale as remove_words). The
-    # output keeps forest count n (delta pids are pmod(·, n) ∈ [0, n)).
+    # no extra jobs (same gate and rationale as remove_words). Delta
+    # pids are existing forests (or 0), so the input's forest-count
+    # hint still holds on the output.
     if not sparse:
-        return set_n_forests_hint(
+        out = (
             pt.groupBy("compute_node")
             .cogroup(delta.groupBy("pid"))
-            .applyInPandas(merge, schema=PT_SCHEMA),
-            n,
+            .applyInPandas(merge, schema=PT_SCHEMA)
         )
-    merged = (
-        pt.where(F.col("compute_node").isin(touched))
-        .groupBy("compute_node")
-        .cogroup(delta.groupBy("pid"))
-        .applyInPandas(merge, schema=PT_SCHEMA)
-    )
-    return set_n_forests_hint(
-        pt.where(~F.col("compute_node").isin(touched)).unionByName(merged), n
-    )
+    else:
+        merged = (
+            pt.where(F.col("compute_node").isin(touched))
+            .groupBy("compute_node")
+            .cogroup(delta.groupBy("pid"))
+            .applyInPandas(merge, schema=PT_SCHEMA)
+        )
+        out = pt.where(~F.col("compute_node").isin(touched)).unionByName(merged)
+    if word_bounds_hint(pt) is not None:
+        set_word_bounds_hint(out, bounds)
+    hint = n_forests_hint(pt)
+    return out if hint is None else set_n_forests_hint(out, hint)

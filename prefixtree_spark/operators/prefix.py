@@ -108,7 +108,7 @@ def prefix_search(pt: DataFrame, prefixes: DataFrame, col: str) -> DataFrame:
         if not frames:
             return
         forest = pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
-        idx = LocalIndex(forest, merge=False)
+        idx = LocalIndex(forest)
         ps: list[str] = []
         ws: list[str] = []
         for p in bp.value:

@@ -44,19 +44,21 @@ PT_SCHEMA_DUP = T.StructType(
 PT_COLUMNS_DUP = [f.name for f in PT_SCHEMA_DUP.fields]
 
 # ---------------------------------------------------------------------------
-# forest-count hint: the build metadata the delta paths need
+# forest-count and word-range hints: the build metadata the delta paths need
 # ---------------------------------------------------------------------------
 #
 # add_words/remove_words gate their sparse-vs-bulk plan on the forest
-# count, and add_words routes new words with pmod(hash, n_forests). A
-# raw frame has to probe it (max(compute_node) — a per-call job over
-# the node table); but ``create`` KNOWS it (its repartition N), and a
-# saved index can store it once. The hint rides as a plain Python
-# attribute on the DataFrame object — best-effort by design: any
-# transformation returns a new object without it, and every consumer
-# falls back to the probe. Correctness never depends on the value
-# (SURVEY.md §0: partition-independent answers); it only picks plans
-# and routing, so a stale-but-plausible count is safe.
+# count, and add_words routes each new word to the forest whose word
+# range covers it. A raw frame has to probe both (max(compute_node),
+# or each forest's lowest end-cap word — a per-call job over the node
+# table); but ``create`` KNOWS them (its partition count N and the N-1
+# range bounds it sampled once), and a saved index can store them
+# once. The hints ride as plain Python attributes on the DataFrame
+# object — best-effort by design: any transformation returns a new
+# object without them, and every consumer falls back to the probe.
+# Correctness never depends on the values (SURVEY.md §0: partition-
+# independent answers); they only pick plans and routing, so a
+# stale-but-plausible value is safe.
 
 _N_FORESTS_ATTR = "_pt_n_forests"
 
@@ -74,6 +76,25 @@ def n_forests_hint(df) -> int | None:
     """The attached forest count, or None (caller probes)."""
     n = getattr(df, _N_FORESTS_ATTR, None)
     return int(n) if n is not None else None
+
+
+_WORD_BOUNDS_ATTR = "_pt_word_bounds"
+
+
+def set_word_bounds_hint(df, bounds):
+    """Attach ``create``'s range bounds to ``df`` (returns ``df``):
+    forest ``i`` holds the words ``w`` with ``bounds[i-1] <= w <
+    bounds[i]``."""
+    try:
+        setattr(df, _WORD_BOUNDS_ATTR, tuple(bounds))
+    except Exception:
+        pass
+    return df
+
+
+def word_bounds_hint(df) -> tuple[str, ...] | None:
+    """The attached range bounds, or None (caller probes)."""
+    return getattr(df, _WORD_BOUNDS_ATTR, None)
 
 
 # ---------------------------------------------------------------------------

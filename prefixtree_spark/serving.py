@@ -3,7 +3,7 @@
 The reference splits its engine in two: Thor runs batch queries,
 Roxie holds the BUILDINDEX output memory-resident and answers point
 queries across requests (`PrefixTree.ecl:459-588`). The engine's
-in-process analog is ``build_local_index`` (one collect+merge, reused
+in-process analog is ``build_local_index`` (one collect, reused
 across calls); this module adds the missing piece — a KEEP-ALIVE
 process boundary, so the index outlives any one client and amortizes
 across clients, not just across calls.
@@ -95,7 +95,7 @@ from urllib.parse import parse_qs, urlparse
 
 import pandas as pd
 
-from prefixtree_spark.operators.query import LocalIndex
+from prefixtree_spark.operators.query import LocalIndex, _warn_if_forests_overlap
 
 
 class PrefixTreeServer:
@@ -1141,6 +1141,7 @@ def load_local_index_published(root: str) -> tuple[LocalIndex, int]:
         for vdir in reversed(chain)
     ]
     pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
+    _warn_if_forests_overlap(pdf)
     return LocalIndex(pdf), entries[-1]
 
 

@@ -130,7 +130,7 @@ def test_banded_traverse_equals_full_randomized():
         for w in words:
             _insert(root, w)
         pdf = pd.DataFrame(list(_emit(root, 0, 1)), columns=PT_COLUMNS)
-        idx = LocalIndex(pdf, merge=False)
+        idx = LocalIndex(pdf)
         k = rng.choice([0, 1, 2, 3, 20])
         batch = QueryBatch(queries)
         banded = set(zip(*_traverse(batch, k, idx)))

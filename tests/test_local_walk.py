@@ -14,12 +14,8 @@ import pytest
 from prefixtree_spark.functions.bytesurrogate import py_to_byte_surrogate
 from prefixtree_spark.functions.damerau import damerau_levenshtein
 from prefixtree_spark.functions.levenshtein import QueryBatch
-from prefixtree_spark.operators.query import (
-    LocalIndex,
-    _traverse,
-    merge_forests,
-    query_one,
-)
+from prefixtree_spark.operators.build import _emit, _insert, _new_node
+from prefixtree_spark.operators.query import LocalIndex, _traverse, query_one
 from prefixtree_spark.plans.tree import PT_COLUMNS
 from tests.conftest import brute_levenshtein
 
@@ -27,10 +23,10 @@ ALPHABETS = ("ab", "abcd", "aé中𝄞", "ABCDEFGHIJ")
 
 
 def _index(words) -> LocalIndex:
-    return LocalIndex(
-        merge_forests(pd.DataFrame({"node": list(words), "is_word": True})),
-        merge=False,
-    )
+    root = _new_node("")
+    for w in words:
+        _insert(root, w)
+    return LocalIndex(pd.DataFrame(list(_emit(root, 0, 1)), columns=PT_COLUMNS))
 
 
 def _vocabulary(seed: int, alphabet: str) -> list[str]:
@@ -82,13 +78,12 @@ def test_scalar_walk_equals_batch_kernel_and_brute_force(seed, alphabet):
 
 
 def test_scalar_walk_on_empty_index():
-    for merge in (False, True):
-        idx = LocalIndex(pd.DataFrame(columns=PT_COLUMNS), merge=merge)
-        for q in ("", "a", "abc"):
-            for k in range(4):
-                assert idx.search(q, k) == []
-                assert query_one(idx, q, k, metric="damerau") == []
-        assert idx.search_many(["", "a", "abc"], 2) == []
+    idx = LocalIndex(pd.DataFrame(columns=PT_COLUMNS))
+    for q in ("", "a", "abc"):
+        for k in range(4):
+            assert idx.search(q, k) == []
+            assert query_one(idx, q, k, metric="damerau") == []
+    assert idx.search_many(["", "a", "abc"], 2) == []
 
 
 def test_search_many_large_batch_equals_brute_force():

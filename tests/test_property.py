@@ -45,7 +45,7 @@ def test_local_engine_vs_brute(seed):
     ] + rng.sample(words, min(5, len(words)))
     k = rng.choice([1, 2, 3])
     res = _traverse_index(
-        LocalIndex(pt, merge=False), QueryBatch(list(set(queries))), k
+        LocalIndex(pt), QueryBatch(list(set(queries))), k
     )
     got = set(zip(res.query_string, res.node, res.final_distance))
     exp = {

@@ -4,7 +4,7 @@
 import pytest
 from pyspark.sql import functions as F
 
-from prefixtree_spark import LocalIndex, create, query, query_one
+from prefixtree_spark import build_local_index, create, query, query_one
 from tests.conftest import brute_levenshtein
 from tests.test_build import SPARSE_WORDS, _words_df
 
@@ -108,7 +108,7 @@ def test_partition_count_invariance(spark):
 
 
 def test_query_one_serving_path(spark, sparse_pt):
-    idx = LocalIndex.from_dataframe(sparse_pt)
+    idx = build_local_index(sparse_pt)
     assert query_one(idx, "KAMINSKI", 1) == sorted(
         (w, brute_levenshtein("KAMINSKI", w))
         for w in SPARSE_WORDS
@@ -123,7 +123,7 @@ def test_query_one_serving_path(spark, sparse_pt):
 
 
 def test_query_one_dataframe_overload_caches_handle(spark, monkeypatch):
-    """query_one(DataFrame, ...) must pay ONE collect+merge per table:
+    """query_one(DataFrame, ...) must pay ONE collect per table:
     repeated calls on the same (semantically identical) plan reuse the
     cached handle; a different table builds a fresh one."""
     import prefixtree_spark.operators.query as qmod
@@ -192,7 +192,7 @@ def test_build_local_index_on_empty_tree(spark):
 
 def test_search_many_matches_per_call(spark, sparse_pt):
     """Batched serving == union of per-call lookups."""
-    idx = LocalIndex.from_dataframe(sparse_pt)
+    idx = build_local_index(sparse_pt)
     qs = ["KAMINSKI", "SMITH", "", "ZZZZZZ", "CHARLES", "SMITH"]
     batched = set(idx.search_many(qs, 2))
     singles = {

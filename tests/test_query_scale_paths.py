@@ -221,7 +221,7 @@ def test_bucketed_index_roundtrip(spark):
 
 
 def test_reusable_index_handle(spark):
-    """build_local_index: collect+merge+broadcast happens ONCE; repeated
+    """build_local_index: collect+broadcast happens ONCE; repeated
     query(..., index=handle) calls reuse the same Spark broadcast and
     return exactly the per-call broadcast_tree results."""
     from prefixtree_spark import build_local_index
@@ -237,20 +237,25 @@ def test_reusable_index_handle(spark):
     assert first == _expected(SPARSE_WORDS, QUERIES, 2)
     bc = handle._bc
     assert bc is not None
-    # second call: same broadcast object, no fresh collect/merge
-    merges = []
-    orig = qmod.merge_forests
-    qmod.merge_forests = lambda pdf: merges.append(1) or orig(pdf)
+    # second call: same broadcast object, no fresh collect
+    builds = []
+    orig = qmod.LocalIndex.__init__
+
+    def spy(self, pdf):
+        builds.append(1)
+        orig(self, pdf)
+
+    qmod.LocalIndex.__init__ = spy
     try:
         second = {
             tuple(r)
             for r in query(pt, qdf, "q", 2, index=handle).collect()
         }
     finally:
-        qmod.merge_forests = orig
+        qmod.LocalIndex.__init__ = orig
     assert second == first
     assert handle._bc is bc
-    assert merges == []
+    assert builds == []
     # the handle also serves point lookups (Roxie analog)
     from prefixtree_spark import query_one
 
@@ -356,38 +361,12 @@ def test_bfs_releases_per_level_checkpoints(spark):
     assert jsc.getPersistentRDDs().size() - before <= 1
 
 
-def test_distributed_merge_matches_driver_merge(spark, monkeypatch):
-    """Above _DRIVER_MERGE_NODES the cold broadcast/serving merge is a
-    distributed create(prefix_len=1) rebuild; its traversal results
-    must be identical to the driver-side merge_forests path (and to
-    brute force). Forced via threshold=0 so the fixture-sized tree
-    takes the distributed route."""
-    import prefixtree_spark.operators.query as qmod
-
-    pt = create(_words_df(spark, SPARSE_WORDS), "word", num_partitions=3)
-    qdf = spark.createDataFrame([(q,) for q in QUERIES], ["q"])
-
-    monkeypatch.setattr(qmod, "_DRIVER_MERGE_NODES", 0)
-    got_dist = {
-        (r.query_string, r.node, r.final_distance)
-        for r in query(pt, qdf, "q", 2, mode="broadcast_tree").collect()
-    }
-    monkeypatch.setattr(qmod, "_DRIVER_MERGE_NODES", 10**9)
-    got_driver = {
-        (r.query_string, r.node, r.final_distance)
-        for r in query(pt, qdf, "q", 2, mode="broadcast_tree").collect()
-    }
-    assert got_dist == got_driver == _expected(SPARSE_WORDS, QUERIES, 2)
-
-
-def test_distributed_merge_handle_serves_and_preserves_right_trim(spark, monkeypatch):
-    """build_local_index through the distributed route: serving lookups
-    still work, and a trim='right' tree's leading-space words survive
-    the rebuild verbatim (the rebuild must not re-trim)."""
-    import prefixtree_spark.operators.query as qmod
+def test_distributed_merge_handle_serves_and_preserves_right_trim(spark):
+    """build_local_index: serving lookups work, and a trim='right'
+    tree's leading-space words survive into the handle verbatim (the
+    collect must not re-trim)."""
     from prefixtree_spark import build_local_index
 
-    monkeypatch.setattr(qmod, "_DRIVER_MERGE_NODES", 0)
     words = spark.createDataFrame(
         [("  cat ",), ("cat ",), ("cart",)], ["word"]
     )

@@ -11,16 +11,19 @@ import time
 
 import pandas as pd
 
-from prefixtree_spark.operators.query import LocalIndex, merge_forests
+from prefixtree_spark.operators.build import _emit, _insert, _new_node
+from prefixtree_spark.operators.query import LocalIndex
+from prefixtree_spark.plans.tree import PT_COLUMNS
 from prefixtree_spark.serving import PrefixTreeServer
 
 WORDS = ["SMITH", "SMYTH", "SMITHE", "JONES", "KAMINSKI", "BAYLISS", "A"]
 
 
 def _index() -> LocalIndex:
-    return LocalIndex(
-        merge_forests(pd.DataFrame({"node": WORDS, "is_word": True})), merge=False
-    )
+    root = _new_node("")
+    for w in WORDS:
+        _insert(root, w)
+    return LocalIndex(pd.DataFrame(list(_emit(root, 0, 1)), columns=PT_COLUMNS))
 
 
 def _get(conn, path):
