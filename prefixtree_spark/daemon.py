@@ -26,10 +26,15 @@ can see anything new. The daemon also ``gc.freeze()``s the preloaded
 objects before forking: a reused worker runs ``gc.collect()`` after
 every task, which otherwise walks every inherited object.
 
+The native trie-walk kernel (``functions/native.py``) is loaded here
+too, so an executor compiles (on a cold cache) and ``dlopen``s it once
+and every worker starts with it mapped.
+
 Correctness: identical to the stock ``pyspark.daemon`` — this module
 only imports libraries the workers would import anyway and then hands
-off to the stock manager loop. If any import fails the daemon still
-starts (workers import lazily as before).
+off to the stock manager loop. If any import or the kernel's load fails
+the daemon still starts (workers import lazily as before; the walk
+falls back to Python).
 """
 
 from __future__ import annotations
@@ -57,6 +62,14 @@ for _mod in (
         importlib.import_module(_mod)
     except Exception:  # pragma: no cover
         pass
+
+# the native trie walk: compiled (or found in the cache) and dlopen'ed
+# once per executor, and every forked worker inherits the mapping; a
+# failure only means the Python walk, after one warning naming why
+try:
+    importlib.import_module("prefixtree_spark.functions.native").load()
+except Exception:  # pragma: no cover
+    pass
 
 from pyspark.daemon import manager  # noqa: E402
 

@@ -26,8 +26,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from prefixtree_spark.plans.tree import VIRTUAL_ROOT_ID
-
 PREFIX_RESULT_SCHEMA = T.StructType(
     [
         T.StructField("prefix", T.StringType(), False),
@@ -37,52 +35,45 @@ PREFIX_RESULT_SCHEMA = T.StructType(
 
 
 def _collect_subtree_words(idx, kids, out: list[str]) -> None:
-    """Append every end-cap word at or below the given child positions."""
+    """Append every end-cap word at or below the given child rows."""
+    labels, is_word = idx.labels, idx.is_word
     stack = list(kids)
     while stack:
         pos = stack.pop()
-        if idx.is_word[pos]:
-            out.append(idx.labels[pos])
+        if is_word[pos]:
+            out.append(labels[pos])
         else:
-            more = idx.kids(int(idx.ids[pos]))
-            if more is not None:
-                stack.extend(more)
+            stack.extend(idx.children(pos))
 
 
 def _prefix_hits(idx, p: str) -> list[str]:
     """All dictionary words in one forest starting with ``p``."""
     out: list[str] = []
-    roots = idx.kids(VIRTUAL_ROOT_ID)
-    if roots is None:
-        return out
     if p == "":
-        _collect_subtree_words(idx, roots, out)
+        _collect_subtree_words(idx, idx.roots, out)
         return out
-    # stack: (child positions, chars of p already matched)
-    stack: list[tuple[list[int], int]] = [(roots, 0)]
+    labels, is_word = idx.labels, idx.is_word
+    # stack: (child rows, chars of p already matched)
+    stack: list[tuple[list[int], int]] = [(idx.roots, 0)]
     while stack:
         kids, consumed = stack.pop()
         rem = p[consumed:]
         for pos in kids:
-            if idx.is_word[pos]:
+            if is_word[pos]:
                 # end-cap carries the ENTIRE word (PrefixTree.ecl:280):
                 # its path equals p's matched part, check the rest
-                word = idx.labels[pos]
+                word = labels[pos]
                 if word.startswith(p):
                     out.append(word)
                 continue
-            label = idx.labels[pos]
+            label = labels[pos]
             if len(label) >= len(rem):
                 if label.startswith(rem):
                     # prefix fully consumed inside this edge: the whole
                     # subtree matches — no more comparisons below here
-                    nxt = idx.kids(int(idx.ids[pos]))
-                    if nxt is not None:
-                        _collect_subtree_words(idx, nxt, out)
+                    _collect_subtree_words(idx, idx.children(pos), out)
             elif rem.startswith(label):
-                nxt = idx.kids(int(idx.ids[pos]))
-                if nxt is not None:
-                    stack.append((nxt, consumed + len(label)))
+                stack.append((idx.children(pos), consumed + len(label)))
     return out
 
 

@@ -7,11 +7,15 @@ query string, return every dictionary word within ``max_distance``
 Levenshtein edits, as rows (query_string, node, final_distance) — the
 reference's output projection (PrefixTree.ecl:445).
 
-Two traversal kernels, one per query shape: ``_traverse`` walks a
-forest with a whole batch (every batch route, ``search_many``);
-``_walk_one`` walks it with one query (``LocalIndex.search``, so
-``query_one`` and the serving replica). ``mode="bfs"`` advances its
-frontier rows with the full-row ``extend_rows_multi`` instead.
+One trie walk, ``_walk``, serves every route and every lookup (the
+batch routes, ``search_many``, ``LocalIndex.search`` and so
+``query_one`` and the serving replica): the native C kernel
+``functions/walk.c``, which walks one query at a time over the
+``LocalIndex`` buffers outside the GIL, as the reference runs its DP as
+embedded C++ (PrefixTree.ecl:315-394). ``_walk_one``, the same walk in
+Python, is its fallback where no C compiler is found, and the tests'
+oracle. ``mode="bfs"`` advances its frontier rows with the full-row
+``extend_rows_multi`` instead.
 
 Pruning is exactly the reference's (SURVEY.md §4 O5/O6):
   - branch-and-bound: stop descending when min of the DP row > k
@@ -27,9 +31,8 @@ side may be the big one:
   - distributed tree (``mode="broadcast_queries"``): the node table
     stays distributed, each partition one or more whole forests
     (SURVEY.md §0), and ``_traverse_forests`` walks every partition
-    once with ALL queries advancing together through ``_traverse``,
-    the one batch kernel (a 2k+1-cell Ukkonen window per query,
-    functions/levenshtein.py). Shuffle-free on the big side when the
+    once with the whole query batch through ``_walk`` (a
+    2k+1-cell Ukkonen window per query). Shuffle-free on the big side when the
     tree carries the engine's colocation record (``create`` output, or
     ``load_index(colocated=True)``, and their ``persist()``); any other
     frame gets ONE range repartition on ``compute_node`` at 2x
@@ -78,13 +81,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from prefixtree_spark.functions import native
 from prefixtree_spark.functions.levenshtein import (
     QueryBatch,
-    banded_initial_state,
+    codepoints,
     extend_rows_multi,
-    extend_state_banded,
-    state_final_distances,
-    state_row_mins,
 )
 from prefixtree_spark.operators.build import _colocate_forests
 from prefixtree_spark.plans.lifecycle import release_checkpoint
@@ -156,122 +157,75 @@ _CHUNK_MAX_PARTITION_NODES = 20_000_000
 _RESHARD_TARGET_PARTITION_NODES = _CHUNK_MAX_PARTITION_NODES // 4
 
 
-def _traverse(
-    batch: QueryBatch, k: int, index: "LocalIndex"
-) -> tuple[list[str], list[str], list[int]]:
-    """THE batch kernel: depth-first branch-and-bound over one forest,
-    all queries at once. Each visited edge advances every active
-    query's Ukkonen window — 2k+1 DP cells, not max_len+1 full rows
-    (functions/levenshtein.py banded block) — in one
-    ``extend_state_banded`` call, the batch analogue of the reference's
-    per-row LOOP body (PrefixTree.ecl:430-442). Pruning: the subtree
-    length band (PrefixTree.ecl:440-441) and the row-minimum bound
-    (PrefixTree.ecl:426,434). Stack entries carry the parent path
-    length ``p``; an end-cap's parent path spells the whole word and
-    the length band has already enforced |len(q) - p| ≤ k, so the
-    final cell is in window."""
-    out_q: list[str] = []
-    out_w: list[str] = []
-    out_d: list[int] = []
-    roots = index.kids(VIRTUAL_ROOT_ID)
-    if not len(batch) or roots is None:
-        return out_q, out_w, out_d
-    ids, labels = index.ids, index.labels
-    is_word, mins, maxs = index.is_word, index.mins, index.maxs
-    W = 2 * k + 1
-    padT = batch.codes_T_padded(k)
-    n_padT = padT.shape[0]
-
-    all_idx = np.arange(len(batch))
-    qlens = batch.lens
-
-    # stack entries: (children, active idx, their qlens, transposed
-    # (W, n) state, path length). Carrying the gathered qlens avoids a
-    # fancy index per edge; state/idx/lens are shared (never mutated)
-    # across a frame's children, so all-true masks skip the copies.
-    stack: list[tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray, int]] = [
-        (roots, all_idx, qlens, banded_initial_state(k, len(batch)), 0)
-    ]
-    while stack:
-        kid_positions, idx, lens_a, state, p = stack.pop()
-        for pos in kid_positions:
-            lo, hi = int(mins[pos]), int(maxs[pos])
-            band = (lens_a >= lo - k) & (lens_a <= hi + k)
-            if not band.all():
-                if not band.any():
-                    continue
-                sub_idx = idx[band]
-                sub_lens = lens_a[band]
-                sub_state = state[:, band]
-            else:
-                sub_idx, sub_lens, sub_state = idx, lens_a, state
-            if is_word[pos]:
-                finals = state_final_distances(sub_lens, sub_state, p, k)
-                hit = finals <= k
-                if hit.any():
-                    word = labels[pos]
-                    for qi, d in zip(sub_idx[hit], finals[hit]):
-                        out_q.append(batch.queries[qi])
-                        out_w.append(word)
-                        out_d.append(int(d))
-                continue
-            label = labels[pos]
-            # one gather per edge: the rows this edge's chars read
-            # (p .. p+L+W-2), restricted to the active columns
-            padT_sub = padT[p : min(p + len(label) + W - 1, n_padT), :][
-                :, sub_idx
-            ]
-            new_state = extend_state_banded(padT_sub, sub_state, label, p, k)
-            new_p = p + len(label)
-            alive = state_row_mins(sub_lens, new_state, new_p, k) <= k
-            if not alive.any():
-                continue
-            kids = index.kids(int(ids[pos]))
-            if kids is None:
-                continue
-            if not alive.all():
-                sub_idx, sub_lens = sub_idx[alive], sub_lens[alive]
-                new_state = new_state[:, alive]
-            stack.append((kids, sub_idx, sub_lens, new_state, new_p))
-    return out_q, out_w, out_d
-
-
-def _traverse_index(idx: "LocalIndex", batch: QueryBatch, k: int) -> pd.DataFrame:
-    q, w, d = _traverse(batch, k, idx)
-    return pd.DataFrame(
-        {"query_string": q, "node": w, "final_distance": pd.array(d, dtype="int32")}
+def _walk(
+    index: "LocalIndex", batch: QueryBatch, k: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """THE trie walk behind every fuzzy lookup, batch or single: every
+    (query, end-cap) pair within ``k`` edits, as (query index, node row
+    position, distance) arrays. The native kernel (``functions/walk.c``)
+    walks one query at a time over the index's flat arrays, outside the
+    GIL; without it, ``_walk_one`` walks each query in Python, with the
+    same rows."""
+    fn = native.load()
+    if fn is not None:
+        return native.walk(fn, index._native_index(), batch.flat, batch.offsets, k)
+    view = index._python_view()
+    qi: list[int] = []
+    pos: list[int] = []
+    dist: list[int] = []
+    for i, s in enumerate(batch.queries):
+        for p, d in _walk_one(view, s, k):
+            qi.append(i)
+            pos.append(p)
+            dist.append(d)
+    return (
+        np.array(qi, dtype=np.int64),
+        np.array(pos, dtype=np.int64),
+        np.array(dist, dtype=np.int32),
     )
 
 
-def _walk_one(roots: list, s: str, k: int) -> list[tuple[str, int]]:
-    """Depth-first branch-and-bound for ONE query over
-    ``LocalIndex._walk_roots`` tuples: plain Python, one DP row per
-    node, only its Ukkonen window ``[p-k, p+k]`` computed. Cells
-    outside the window hold k+1, a lower bound on their true value, so
-    every cell ≤ k is exact (the clamp argument of the banded kernel).
-    Same pruning as ``_traverse``: the subtree length band
+def _traverse_index(idx: "LocalIndex", batch: QueryBatch, k: int) -> pd.DataFrame:
+    qi, pos, d = _walk(idx, batch, k)
+    return pd.DataFrame(
+        {
+            "query_string": np.array(batch.queries, dtype=object)[qi],
+            "node": idx.labels[pos],
+            "final_distance": d,
+        }
+    )
+
+
+def _walk_one(view: tuple, s: str, k: int) -> list[tuple[int, int]]:
+    """The native walk's Python twin, its fallback and its test oracle:
+    depth-first branch-and-bound for ONE query over
+    ``LocalIndex._python_view`` (the same CSR layout as lists), one DP
+    row per node, only its Ukkonen window ``[p-k, p+k]`` computed.
+    Cells outside the window hold k+1, a lower bound on their true
+    value, so every cell ≤ k is exact. Pruning: the subtree length band
     (PrefixTree.ecl:440-441), the row-minimum bound
     (PrefixTree.ecl:426,434) — checked per char, since a row's minimum
     never falls along a path — and the end-cap final-distance read.
-    Returns unordered (word, distance) hits."""
+    Returns unordered (node row position, distance) hits."""
+    labels, mins, maxs, is_word, kid_off, kid_pos, roots = view
     n = len(s)
     big = k + 1
-    out: list[tuple[str, int]] = []
+    out: list[tuple[int, int]] = []
     stack = [(roots, [j if j <= k else big for j in range(n + 1)], 0)]
     while stack:
         kids, row, p = stack.pop()
-        for label, lo, hi, sub in kids:
-            if n < lo - k or n > hi + k:
+        for pos in kids:
+            if n < mins[pos] - k or n > maxs[pos] + k:
                 continue
-            if sub is None:
+            if is_word[pos]:
                 # end-cap: the path spells the word (p = len(word)) and
                 # the band put |n - p| <= k, so row[n] is in the window
                 d = row[n]
                 if d <= k:
-                    out.append((label, d))
+                    out.append((pos, d))
                 continue
             cur, q = row, p
-            for c in label:
+            for c in labels[pos]:
                 q += 1
                 j_lo = q - k if q > k else 0
                 j_hi = q + k if q + k < n else n
@@ -297,8 +251,9 @@ def _walk_one(roots: list, s: str, k: int) -> list[tuple[str, int]]:
                 if m > k:
                     break
             else:
-                if sub:
-                    stack.append((sub, cur, q))
+                lo, hi = kid_off[pos], kid_off[pos + 1]
+                if lo != hi:
+                    stack.append((kid_pos[lo:hi], cur, q))
     return out
 
 
@@ -409,13 +364,10 @@ class _QueryPayload:
     """Broadcast holder for a traversal's query batch: ships ONLY the
     strings, builds the ``QueryBatch`` lazily ON THE WORKER and memoizes
     it on the unpickled holder — which the pyspark broadcast registry
-    caches per worker process — so every per-task derived cost (the
-    dense codes matrix, the valid mask, the per-k padded transpose) is
-    paid once per WORKER per chunk instead of once per TASK, while the
-    wire still carries the compact string list (the prebuilt-QueryBatch
-    broadcast alternative ships the padded int32 codes matrix, ~9x the
-    bytes at name-length payloads — wrong trade at the 1M-query chunk
-    cap even though it measured the same locally; SCALING r13).
+    caches per worker process — so the per-task derived cost (the
+    flat codepoint buffer) is paid once per WORKER per chunk instead of
+    once per TASK, while the wire still carries the compact string
+    list (SCALING r13).
     Workers run tasks serially, so the memo needs no lock."""
 
     __slots__ = ("queries", "_batch")
@@ -1217,67 +1169,125 @@ def query(
 class LocalIndex:
     """A collected, memory-resident node table for low-latency point
     queries — the honest Spark analog of Roxie serving a preloaded index
-    (SURVEY.md §3.3): no distributed job per query. A single lookup
-    (``search``) is one scalar walk (``_walk_one``); batches
-    (``search_many``, the broadcast and distributed paths) run the
-    batch kernel ``_traverse``.
+    (SURVEY.md §3.3): no distributed job per query. Every fuzzy lookup
+    on it, a single ``search`` or a batch (``search_many``, the
+    broadcast and distributed paths), is one call of the native trie
+    walk (``_walk``).
+
+    The layout is the walk's own input, flat numpy buffers by row
+    position, and it is all that pickles (a broadcast decodes raw
+    buffers, no per-node Python objects):
+      - ``codes`` / ``code_off``: every node's label as int32
+        codepoints back to back, row i's at
+        ``codes[code_off[i] : code_off[i+1]]``;
+      - ``mins`` / ``maxs`` (int32): the subtree's word-length band;
+        ``is_word``: the end-cap flag;
+      - ``kid_off`` / ``kid_pos``: children in CSR, row i's child rows
+        at ``kid_pos[kid_off[i] : kid_off[i+1]]`` in build order;
+        ``roots``: the rows hanging off the virtual root;
+      - ``ids``: the node ids (the walk never reads them).
+    ``labels`` (the label strings) comes from the node table, or is
+    decoded from ``codes`` on first use after unpickling.
 
     The node table is taken as it is: any set of forests hanging off
     the virtual root walks correctly, and ``create``'s word-range
     forests, concatenated, are in effect the one merged trie."""
 
-    def __init__(self, pt_pdf: pd.DataFrame):
-        self.ids = pt_pdf["id"].to_numpy()
-        self.labels = pt_pdf["node"].to_numpy()
-        self.is_word = pt_pdf["is_word"].to_numpy()
-        self.mins = pt_pdf["_min"].to_numpy()
-        self.maxs = pt_pdf["_max"].to_numpy()
-        # CSR adjacency instead of a dict of Python lists: three numpy
-        # arrays pickle/deserialize as raw buffers, so every traversal
-        # task decodes the broadcast in ~O(1) — a dict with one list
-        # per internal node costs seconds per task at millions of nodes
-        parents = np.asarray(pt_pdf["parent_id"].to_numpy(), dtype=np.int64)
-        order = np.argsort(parents, kind="stable").astype(np.int64)
-        sp = parents[order]
-        uniq, starts = np.unique(sp, return_index=True)
-        self._kids_pos = order
-        self._kids_parents = uniq
-        self._kids_offsets = np.append(starts, len(sp)).astype(np.int64)
-        self._bc = None  # cached Spark broadcast (per-process, not pickled)
-        self._walk = None  # scalar-walk node tuples (built lazily, not pickled)
+    __slots__ = (
+        "ids",
+        "codes",
+        "code_off",
+        "mins",
+        "maxs",
+        "is_word",
+        "kid_off",
+        "kid_pos",
+        "roots",
+        "_labels",
+        "_native",
+        "_python",
+        "_bc",
+    )
+    # the buffers; the rest is derived per process (not pickled)
+    _PICKLED = __slots__[:9]
 
-    def kids(self, parent_id: int):
-        """Row positions of ``parent_id``'s children (build order), or
-        None — CSR binary search, no per-node Python objects."""
-        i = int(np.searchsorted(self._kids_parents, parent_id))
-        if i >= len(self._kids_parents) or self._kids_parents[i] != parent_id:
-            return None
-        return self._kids_pos[self._kids_offsets[i] : self._kids_offsets[i + 1]]
+    def __init__(self, pt_pdf: pd.DataFrame):
+        labels = pt_pdf["node"].to_numpy(dtype=object)
+        n = len(labels)
+        self.ids = np.ascontiguousarray(pt_pdf["id"].to_numpy(), dtype=np.int64)
+        self.mins = np.ascontiguousarray(pt_pdf["_min"].to_numpy(), dtype=np.int32)
+        self.maxs = np.ascontiguousarray(pt_pdf["_max"].to_numpy(), dtype=np.int32)
+        self.is_word = np.ascontiguousarray(pt_pdf["is_word"].to_numpy(), dtype=np.bool_)
+        self.codes = codepoints("".join(labels))
+        self.code_off = np.zeros(n + 1, dtype=np.int64)
+        np.cumsum(np.fromiter(map(len, labels), dtype=np.int64, count=n), out=self.code_off[1:])
+        # a row's parent is the row holding its parent_id; rows whose
+        # parent is neither that nor the virtual root are unreachable
+        parents = np.asarray(pt_pdf["parent_id"].to_numpy(), dtype=np.int64)
+        by_id = np.argsort(self.ids, kind="stable")
+        at = np.searchsorted(self.ids, parents, sorter=by_id)
+        ppos = by_id[np.minimum(at, n - 1)]
+        linked = (at < n) & (self.ids[ppos] == parents)
+        self.roots = np.flatnonzero(parents == VIRTUAL_ROOT_ID).astype(np.int64)
+        kids = np.flatnonzero(linked & (parents != VIRTUAL_ROOT_ID))
+        self.kid_pos = kids[np.argsort(ppos[kids], kind="stable")].astype(np.int64)
+        self.kid_off = np.zeros(n + 1, dtype=np.int64)
+        np.cumsum(np.bincount(ppos[kids], minlength=n), out=self.kid_off[1:])
+        self._labels = labels
+        self._native = None  # walk.c's pt_index over the buffers
+        self._python = None  # the fallback walk's list view
+        self._bc = None  # cached Spark broadcast
 
     def __getstate__(self):
-        state = {
-            s: getattr(self, s) for s in self.__slots__ if s not in ("_bc", "_walk")
-        }
-        return state
+        return {s: getattr(self, s) for s in self._PICKLED}
 
     def __setstate__(self, state):
         for s, v in state.items():
             setattr(self, s, v)
-        self._bc = None
-        self._walk = None
+        self._labels = self._native = self._python = self._bc = None
 
-    __slots__ = (
-        "ids",
-        "labels",
-        "is_word",
-        "mins",
-        "maxs",
-        "_kids_pos",
-        "_kids_parents",
-        "_kids_offsets",
-        "_bc",
-        "_walk",
-    )
+    @property
+    def labels(self) -> np.ndarray:
+        """The label strings by row position (object array)."""
+        labels = self._labels
+        if labels is None:
+            text = self.codes.astype("<i4", copy=False).tobytes().decode(
+                "utf-32-le", "surrogatepass"
+            )
+            off = self.code_off.tolist()
+            labels = np.empty(len(off) - 1, dtype=object)
+            labels[:] = [text[a:b] for a, b in zip(off, off[1:])]
+            self._labels = labels
+        return labels
+
+    def children(self, pos: int) -> np.ndarray:
+        """Row positions of row ``pos``'s children (build order)."""
+        return self.kid_pos[self.kid_off[pos] : self.kid_off[pos + 1]]
+
+    def _native_index(self) -> native.Index:
+        ix = self._native
+        if ix is None:
+            ix = self._native = native.bind(
+                self.codes, self.code_off, self.mins, self.maxs,
+                self.is_word, self.kid_off, self.kid_pos, self.roots,
+            )
+        return ix
+
+    def _python_view(self) -> tuple:
+        """The buffers as Python lists, for the fallback ``_walk_one``;
+        built on its first walk only."""
+        view = self._python
+        if view is None:
+            view = self._python = (
+                self.labels.tolist(),
+                self.mins.tolist(),
+                self.maxs.tolist(),
+                self.is_word.tolist(),
+                self.kid_off.tolist(),
+                self.kid_pos.tolist(),
+                self.roots.tolist(),
+            )
+        return view
 
     def spark_broadcast(self, spark: SparkSession):
         """Broadcast this index ONCE and reuse it across ``query``
@@ -1289,39 +1299,11 @@ class LocalIndex:
 
     def search(self, s: str, max_distance: int) -> list[tuple[str, int]]:
         """Every word within ``max_distance`` edits of ``s``, sorted —
-        one scalar walk (``_walk_one``), the reference's own per-query
-        loop (PrefixTree.ecl:459-539). A batch of one gains nothing
-        from the vectorized kernels and pays numpy dispatch per edge."""
+        the reference's per-query loop (PrefixTree.ecl:459-539) as one
+        walk of one query."""
         k = _distance(max_distance)
-        roots = self._walk
-        if roots is None:
-            roots = self._walk_roots()
-        return sorted(_walk_one(roots, s, k))
-
-    def _walk_roots(self) -> list:
-        """Python-object view of the tree for ``_walk_one``: one
-        ``(label, _min, _max, children)`` tuple per node, ``children``
-        None on end-caps. Built on the first scalar lookup only —
-        broadcast and batch paths never pay for it — into locals, then
-        published by ONE attribute store, so concurrent first lookups
-        at worst build it twice."""
-        kid_lists = {p: [] for p in self._kids_parents.tolist()}
-        nodes = [
-            (label, lo, hi, None if word else kid_lists.get(i, []))
-            for label, lo, hi, word, i in zip(
-                self.labels.tolist(),
-                self.mins.tolist(),
-                self.maxs.tolist(),
-                self.is_word.tolist(),
-                self.ids.tolist(),
-            )
-        ]
-        parents = np.repeat(self._kids_parents, np.diff(self._kids_offsets))
-        for parent, pos in zip(parents.tolist(), self._kids_pos.tolist()):
-            kid_lists[parent].append(nodes[pos])
-        roots = kid_lists.get(VIRTUAL_ROOT_ID, [])
-        self._walk = roots
-        return roots
+        _, pos, d = _walk(self, QueryBatch([s]), k)
+        return sorted(zip(self.labels[pos].tolist(), d.tolist()))
 
     def search_prefix(self, p: str) -> list[str]:
         """Sorted dictionary words starting with ``p`` — the trie's
@@ -1333,15 +1315,11 @@ class LocalIndex:
     def search_many(
         self, queries: list[str], max_distance: int
     ) -> list[tuple[str, str, int]]:
-        """Batched serving lookups: ONE ``_traverse`` shared by the
-        whole batch, so each visited trie edge advances every active
-        query's 2k+1-cell DP window in a single vectorized op — node
-        visits amortize across the batch exactly as in the distributed
-        strategies, at any batch size. Returns (query, word, distance)
-        tuples (unordered)."""
+        """Batched serving lookups: ONE walk call for the whole batch.
+        Returns (query, word, distance) tuples (unordered)."""
         k = _distance(max_distance)
-        q, w, d = _traverse(QueryBatch(list(queries)), k, self)
-        return list(zip(q, w, d))
+        res = _traverse_index(self, QueryBatch(list(queries)), k)
+        return list(zip(*(res[c].tolist() for c in res.columns)))
 
 
 # Recently built query_one handles, keyed on the node table's semantic

@@ -53,7 +53,8 @@ across clients, not just across calls.
         ``requests`` section — per endpoint path, the request count,
         the non-2xx count and the summed in-handler seconds, unknown
         paths pooled under ``other`` — so a client's round-trip time
-        minus handler time is transport time)
+        minus handler time is transport time; and ``kernel``, the
+        trie walk in use — see Threading)
 
 Operationally (documented, not sandbox-testable beyond localhost):
 run one server per replica behind any HTTP load balancer; each
@@ -71,12 +72,16 @@ path only. A Spark Connect deployment can host the same handle
 server-side; nothing here depends on a SparkSession once the index
 is built.
 
-Threading: ``ThreadingHTTPServer`` + a read-only index — lookups
-(``LocalIndex.search``, one scalar trie walk per query) allocate
-per-call state, so concurrent requests need no locks on the index. The
-walk's node tuples are built on the first lookup and published by one
-attribute store; concurrent first lookups at worst build them twice.
-The only lock guards the request counters: one update per request.
+Threading: ``ThreadingHTTPServer`` + a read-only index. A lookup
+(``LocalIndex.search``) is one call of the native trie walk
+(``functions/walk.c``) over the index's flat numpy buffers: it runs
+outside the GIL, so handler threads look up in parallel, and it holds
+no per-node Python objects, only its own scratch, so concurrent
+requests need no locks on the index. The only lock guards the request
+counters: one update per request. ``/health`` names the walk in use
+(``"kernel": "native"``, or ``"python"`` with ``"kernel_cause"`` when
+no C compiler could build it; the Python walk returns the same rows,
+slower, and holds the GIL).
 
 Transport: handlers set TCP_NODELAY. A response leaves as two writes
 (headers, then body), and with Nagle's algorithm on, the second waits
@@ -95,6 +100,7 @@ from urllib.parse import parse_qs, urlparse
 
 import pandas as pd
 
+from prefixtree_spark.functions import native
 from prefixtree_spark.operators.query import LocalIndex, _warn_if_forests_overlap
 
 
@@ -254,6 +260,7 @@ class PrefixTreeServer:
                         # can't report a mixed replica state
                         body = {
                             "nodes": int(len(index.ids)),
+                            **native.status(),
                             "requests": srv._requests_snapshot(),
                         }
                         h_ann = srv.ann_index

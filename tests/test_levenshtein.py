@@ -45,7 +45,7 @@ def test_incremental_extension_matches_single_shot():
     split = extend_rows(batch, extend_rows(batch, batch.initial_rows(), idx, "KAMINSK"), idx, "I")
     whole = extend_rows(batch, batch.initial_rows(), idx, "KAMINSKI")
     assert np.array_equal(
-        np.where(batch._valid, split, -1), np.where(batch._valid, whole, -1)
+        np.where(batch.valid, split, -1), np.where(batch.valid, whole, -1)
     )
     finals = batch.final_distances(whole, idx)
     assert finals.tolist() == [brute_levenshtein(q, "KAMINSKI") for q in queries]
@@ -97,7 +97,7 @@ def test_extend_rows_multi_matches_per_label():
 
 
 def test_banded_traverse_equals_full_randomized():
-    """The batch kernel (Ukkonen-banded windows) must return EXACTLY
+    """The native trie walk (Ukkonen-banded windows) must return EXACTLY
     the brute-force result set — every (query, word, distance) triple —
     across random vocabularies, query sets, and k values, including k=0
     and k larger than the longest string (where the window
@@ -109,7 +109,7 @@ def test_banded_traverse_equals_full_randomized():
     from prefixtree_spark.functions.levenshtein import QueryBatch, levenshtein
     from prefixtree_spark.operators.build import _emit, _insert, _new_node
     from prefixtree_spark.plans.tree import PT_COLUMNS
-    from prefixtree_spark.operators.query import LocalIndex, _traverse
+    from prefixtree_spark.operators.query import LocalIndex, _walk
 
     rng = random.Random(42)
     alpha = "ABCD"
@@ -133,7 +133,8 @@ def test_banded_traverse_equals_full_randomized():
         idx = LocalIndex(pdf)
         k = rng.choice([0, 1, 2, 3, 20])
         batch = QueryBatch(queries)
-        banded = set(zip(*_traverse(batch, k, idx)))
+        qi, pos, d = _walk(idx, batch, k)
+        banded = {(queries[i], idx.labels[p], x) for i, p, x in zip(qi, pos, d)}
         brute = {
             (q, w, levenshtein(q, w))
             for q in set(queries)
@@ -141,79 +142,3 @@ def test_banded_traverse_equals_full_randomized():
             if levenshtein(q, w) <= k
         }
         assert banded == brute, (trial, k, words[:5], queries[:5])
-
-
-def test_banded_state_kernel_equals_row_kernel():
-    """The transposed (W, n) state kernel (extend_state_banded /
-    state_row_mins / state_final_distances) must agree cell by cell
-    with the full-width row kernel (extend_rows / row_mins /
-    final_distances) on every in-window cell 0 ≤ j ≤ max_len, across
-    random labels, path positions, and k — including windows that run
-    past the padded code matrix (the guaranteed-pruned zone). The band
-    argument makes the contract exact where it matters: a cell ≤ k is
-    identical in both kernels, a cell > k is > k in both (so both are
-    compared clamped at k+1)."""
-    import random
-
-    import numpy as np
-
-    from prefixtree_spark.functions.levenshtein import (
-        QueryBatch,
-        banded_initial_state,
-        extend_rows,
-        extend_state_banded,
-        state_final_distances,
-        state_row_mins,
-    )
-
-    rng = random.Random(7)
-    alpha = "ABCD"
-    for trial in range(60):
-        n = rng.randint(1, 12)
-        queries = [
-            "".join(rng.choice(alpha) for _ in range(rng.randint(1, 10)))
-            for _ in range(n)
-        ]
-        k = rng.choice([0, 1, 2, 3, 7])
-        W = 2 * k + 1
-        batch = QueryBatch(queries)
-        idx = np.arange(n)
-        lens = batch.lens[idx]
-        padT = batch.codes_T_padded(k)
-        rows = batch.initial_rows()
-        state = banded_initial_state(k, n)
-
-        def clamp(a):
-            return np.minimum(a, k + 1)
-
-        def check(p):
-            for w in range(W):
-                j = p - k + w
-                if 0 <= j <= batch.max_len:
-                    assert (clamp(state[w]) == clamp(rows[:, j])).all(), (
-                        trial, p, k, j, queries,
-                    )
-            assert (
-                clamp(state_row_mins(lens, state, p, k))
-                == clamp(batch.row_mins(rows, idx))
-            ).all(), (trial, p, k)
-            fin = np.abs(lens - p) <= k
-            assert (
-                clamp(state_final_distances(lens[fin], state[:, fin], p, k))
-                == clamp(batch.final_distances(rows, idx)[fin])
-            ).all(), (trial, p, k)
-
-        p = 0
-        check(p)
-        for _ in range(rng.randint(1, 5)):
-            label = "".join(
-                rng.choice(alpha) for _ in range(rng.randint(1, 6))
-            )
-            rows = extend_rows(batch, rows, idx, label)
-            padT_sub = padT[p : min(p + len(label) + W - 1, padT.shape[0]), :][
-                :, idx
-            ]
-            state = extend_state_banded(padT_sub, state, label, p, k)
-            p += len(label)
-            check(p)
-

@@ -1264,3 +1264,24 @@ def test_server_bytes_mode_serves_byte_distances(spark):
         p = urllib.parse.quote("h\u00e9")
         assert _get(srv.url(f"/prefix?p={p}")) == ["héllo"]
         assert _get(srv.url("/prefix?p=h")) == ["hello", "héllo"]
+
+
+def test_health_names_the_trie_walk(monkeypatch):
+    """``/health`` reports the walk lookups run on: the native kernel,
+    or the Python fallback with the cause; both answer the same."""
+    from prefixtree_spark.functions import native
+    from tests.test_local_walk import _index
+
+    idx = _index(SPARSE_WORDS)
+    want = sorted(
+        [w, d] for w in SPARSE_WORDS if (d := brute_levenshtein("SMYTH", w)) <= 2
+    )
+    with PrefixTreeServer(idx) as srv:
+        health = _get(srv.url("/health"))
+        assert health["kernel"] == ("native" if native._compiler() else "python")
+        assert _get(srv.url("/search?q=SMYTH&k=2")) == want
+        monkeypatch.setattr(native, "_state", native._State(None, "OSError: no C compiler"))
+        health = _get(srv.url("/health"))
+        assert health["kernel"] == "python"
+        assert health["kernel_cause"] == "OSError: no C compiler"
+        assert _get(srv.url("/search?q=SMYTH&k=2")) == want

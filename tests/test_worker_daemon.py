@@ -3,7 +3,8 @@ interpreter so the patched ``zipimporter`` stays out of this process):
 ``importlib.invalidate_caches()`` — which every Spark Python task calls
 — must not re-read an unchanged archive, and must still pick up a
 changed one. And the session's choice of the daemon: only when workers
-can import the package."""
+can import the package. And the native trie walk: loaded by the daemon
+before it forks, so every worker inherits it."""
 
 import os
 import subprocess
@@ -106,3 +107,51 @@ def test_daemon_chosen_in_this_session(spark):
     )
     assert _daemon_module() == want
     assert spark.sparkContext.getConf().get("spark.python.daemon.module") == want
+
+
+KERNEL_CHILD = textwrap.dedent(
+    """
+    import prefixtree_spark.daemon  # preloads, as the daemon's parent does
+    from prefixtree_spark.functions import native
+    print(native._state is not None, native.status()["kernel"])
+    """
+)
+
+
+def test_daemon_loads_the_kernel_before_forking(spark):
+    """Importing the daemon module loads the native walk before any
+    walk runs, and in this session's workers the daemon, the workers'
+    parent, has the compiled kernel mapped: every forked worker
+    inherits it."""
+    from prefixtree_spark.functions import native
+    from prefixtree_spark.session import _daemon_module
+
+    want = "native" if native._compiler() else "python"
+    out = subprocess.run(
+        [sys.executable, "-c", KERNEL_CHILD],
+        cwd=ROOT,
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    assert out.returncode == 0, out.stderr
+    assert out.stdout.split() == ["True", want]
+
+    def probe(_):
+        import os
+
+        from prefixtree_spark.functions import native
+
+        try:
+            with open(f"/proc/{os.getppid()}/maps") as f:
+                mapped = "/prefixtree_spark/walk-" in f.read()
+        except OSError:  # no procfs: the parent's mappings are not visible
+            mapped = None
+        yield mapped, native.status()["kernel"]
+
+    (parent_mapped, kernel), = (
+        spark.sparkContext.parallelize([0], 1).mapPartitions(probe).collect()
+    )
+    assert kernel == want
+    if _daemon_module() is not None and want == "native" and parent_mapped is not None:
+        assert parent_mapped
